@@ -78,6 +78,11 @@ def test_lsh_pairs_and_jaccard(dup_corpus):
     assert (3, 102) not in verified
 
 
+def test_near_dup_pairs_needs_docs_or_per_doc():
+    with pytest.raises(ValueError, match="pass docs or per_doc"):
+        near_dup_pairs(None)
+
+
 def test_simhash_identity_and_locality(dup_corpus):
     sh = {
         r["doc_id"]: r["sh"]

@@ -392,7 +392,7 @@ def test_segmented_pruned_engages_and_is_exact(spark, tmp_path):
 
 
 def test_segmented_decode_live_equals_join_path(spark, tmp_path):
-    """The decode-time tombstone filter (codec.make_decode_live_udf)
+    """The decode-time tombstone filter (codec.explode_blocks_rows with tomb_bc)
     returns exactly the rows the broadcast max-layer JOIN path returns
     — same live postings, same scores."""
     work, idx = tmp_path / "work", tmp_path / "idx"

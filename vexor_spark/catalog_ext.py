@@ -42,6 +42,7 @@ from vexor_spark.operators.textstats import (
     token_stats_table,
     ws_token_count_col,
 )
+from vexor_spark.plans.local import local_frame
 
 EMB_DIM = 64
 RND = SCORE_ROUND_DP
@@ -543,7 +544,8 @@ def q_weighted_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     n_docs = float(len(cand_rows))
-    cand = spark.createDataFrame(
+    cand = local_frame(
+        spark,
         [
             (int(r["doc_id"]), i + 1, float(r["dense_score"]))
             for i, r in enumerate(cand_rows)
@@ -559,7 +561,7 @@ def q_weighted_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = tokenized.agg(F.avg("dl").alias("avgdl"))
     qterms = [(t,) for t in prepare_query_terms(RERANK_QUERY)]
-    qdf = spark.createDataFrame(qterms, "term string")
+    qdf = local_frame(spark, qterms, "term string")
     tf = (
         tokenized.select("doc_id", "dl", F.explode("toks").alias("term"))
         .groupBy("doc_id", "dl", "term")
@@ -620,7 +622,8 @@ def q_weighted_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .collect()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, int(r["doc_id"]), float(r["score"])) for i, r in enumerate(scored)],
         "rank long, doc_id long, score double",
     )
@@ -694,18 +697,26 @@ FROM normed ORDER BY score DESC, dense_rank ASC LIMIT 10"""
 
 # --- dedup family ------------------------------------------------------------
 
-# Planted-duplicate corpus: every 7th doc duplicated under doc_id+100000.
+# Planted-duplicate corpus: every DUP_MOD-th doc duplicated under
+# doc_id + DUP_ID_SHIFT. _dup_docs, SQL_DUP_DOCS and _dup_shifted_union
+# all read these two constants, so the Spark frames and the DuckDB
+# oracle cannot drift apart.
+DUP_MOD = 7
+DUP_ID_SHIFT = 100000
+
+
 def _dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs_table(spark, sf_dir).select("doc_id", "text")
-    dups = d.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+    dups = d.filter(F.col("doc_id") % DUP_MOD == 0).select(
+        (F.col("doc_id") + DUP_ID_SHIFT).alias("doc_id"), "text"
     )
     return d.union(dups)
 
 
 SQL_DUP_DOCS = (
     "SELECT doc_id, text FROM documents "
-    "UNION ALL SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0"
+    f"UNION ALL SELECT doc_id + {DUP_ID_SHIFT} AS doc_id, text FROM documents "
+    f"WHERE doc_id % {DUP_MOD} = 0"
 )
 
 
@@ -740,7 +751,7 @@ def _tokenized_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_shifted_union(base: DataFrame) -> DataFrame:
-    """base ∪ id-shifted copy of the doc_id % 7 slice — the planted
+    """base ∪ id-shifted copy of the doc_id % DUP_MOD slice — the planted
     duplicate branch of `_dup_docs`, applied to any per-doc frame whose
     non-id columns are functions of the TEXT only. A planted dup's text
     IS its base doc's text, so its derived features are identical and
@@ -752,8 +763,8 @@ def _dup_shifted_union(base: DataFrame) -> DataFrame:
     `base` must be (lazily) checkpointed by the caller so the two
     branches read materialized rows instead of re-running the kernel."""
     return base.union(
-        base.filter(F.col("doc_id") % 7 == 0).withColumn(
-            "doc_id", F.col("doc_id") + 100000
+        base.filter(F.col("doc_id") % DUP_MOD == 0).withColumn(
+            "doc_id", F.col("doc_id") + DUP_ID_SHIFT
         )
     )
 

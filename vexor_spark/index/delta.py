@@ -78,13 +78,14 @@ from vexor_spark.index.checkpoint import (
 )
 from vexor_spark.index.merge import DOC_COLS, full_merge
 from vexor_spark.constants import SCORE_ROUND_DP
-from vexor_spark.index.storage import PersistedIndex, decode_postings_udf
+from vexor_spark.index.storage import PersistedIndex
 from vexor_spark.functions.tokenize import prepare_query_terms
 from vexor_spark.operators.chunking import with_document
 from vexor_spark.operators import postings as postings_mod
 from vexor_spark.operators.postings import tokenize_docs
 from vexor_spark.operators.scoring import bm25_contribution_col, top_k
 from vexor_spark.plans.docids import assign_doc_ids
+from vexor_spark.plans.local import local_frame
 
 
 def _manifest_path(index_dir: Path) -> Path:
@@ -282,8 +283,10 @@ def _apply_delta(
             .drop("bucket")
         )
     else:  # every changed bucket was removed outright
-        new_chunks = spark.createDataFrame(
-            [], "url string, chunk_index int, label string, preview string, "
+        new_chunks = local_frame(
+            spark,
+            [],
+            "url string, chunk_index int, label string, preview string, "
             "start_line int, end_line int",
         )
 
@@ -581,7 +584,7 @@ class SegmentedIndex:
         driver numpy arrays (one pyarrow read, cached per instance), or
         None when there are no tombstones or the volume exceeds
         TOMB_DRIVER_MAX. Feeds BOTH the θ walk's exclusion set and the
-        decode-time filter broadcast (codec.make_decode_live_udf)."""
+        decode-time filter broadcast (codec.explode_blocks_rows)."""
         if getattr(self, "_tomb_np", "absent") != "absent":
             return self._tomb_np
         import numpy as np
@@ -780,7 +783,7 @@ class SegmentedIndex:
     def _exploded_rows(self, blocks: DataFrame) -> DataFrame:
         """blocks → live (term, df, doc_id, tf, doc_len) rows. The
         tombstone filter is applied AT DECODE TIME via the broadcast
-        map (codec.make_decode_live_udf) — no join stage; falls back to
+        map (codec.explode_blocks_rows) — no join stage; falls back to
         the broadcast max-layer join only when the tombstone volume
         exceeds the driver budget."""
         from vexor_spark.functions.codec import explode_blocks_rows
@@ -861,7 +864,7 @@ class SegmentedIndex:
         has live segments, so the steady-state path must prune too)."""
         terms = prepare_query_terms(query)
         if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return top_k(self.spark.createDataFrame([], "doc_id long, score double"), k)
+            return top_k(local_frame(self.spark, [], "doc_id long, score double"), k)
         if prune:
             from vexor_spark.index.wand import pruned_scores
 
@@ -870,7 +873,7 @@ class SegmentedIndex:
         else:
             scored = self.scored_rows(query)
             if scored is None:
-                scored = self.spark.createDataFrame([], "doc_id long, score double")
+                scored = local_frame(self.spark, [], "doc_id long, score double")
         return top_k(scored, k, round_dp=round_dp)
 
     def scored_rows(self, query: str) -> DataFrame | None:
@@ -909,12 +912,13 @@ class SegmentedIndex:
         qterms = {name: prepare_query_terms(q) for name, q in queries.items()}
         terms_all = sorted({t for ts in qterms.values() for t in ts})
         if not terms_all or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         df_map = self.term_df_map(terms_all)
         present = [t for t in terms_all if t in df_map]
         if not present:
-            return spark.createDataFrame([], empty_schema)
-        qdf = spark.createDataFrame(
+            return local_frame(spark, [], empty_schema)
+        qdf = local_frame(
+            spark,
             [(n, t) for n, ts in qterms.items() for t in ts if t in df_map],
             "query string, term string",
         )

@@ -61,6 +61,7 @@ from vexor_spark.operators.chunking import with_document
 from vexor_spark.operators import postings as postings_mod
 from vexor_spark.operators.postings import corpus_stats, tokenize_docs
 from vexor_spark.plans.docids import assign_doc_ids
+from vexor_spark.plans.local import local_frame
 
 REBUILD_RATIO = 0.5  # reference index_service.py:29 max_incremental_ratio
 
@@ -85,8 +86,9 @@ def _write_meta(index_dir: Path, *, term_buckets: int, block_size: int,
 def _write_docs_stats(doc_table: DataFrame, index_dir: Path,
                       doc_count: int, avgdl: float) -> None:
     doc_table.write.mode("overwrite").parquet(str(index_dir / "docs"))
-    doc_table.sparkSession.createDataFrame(
-        [(doc_count, avgdl)], "doc_count long, avg_doc_len double"
+    local_frame(
+        doc_table.sparkSession, [(doc_count, avgdl)],
+        "doc_count long, avg_doc_len double",
     ).write.mode("overwrite").parquet(str(index_dir / "stats"))
 
 

@@ -13,7 +13,8 @@ SURVEY §7 Phase 2):
                    (term, df, block_id, n, block_first, block_last,
                     block_ub, blob)                 — one row per BLOCK
       docs/        (doc_id, url, chunk_index, preview, lines, doc_len)
-      stats/       (doc_count, avg_doc_len)
+      stats/       (doc_count, avg_doc_len)                 — one row, in
+                   one file (written from a LocalRelation)
 
 Posting lists are cut into fixed-size blocks, each independently
 delta-gap+varint encoded and carrying its doc-id range and max BM25
@@ -47,7 +48,6 @@ from pyspark.sql import functions as F
 from vexor_spark.constants import SCORE_ROUND_DP
 from vexor_spark.functions.codec import (
     POSTING_BLOCK_SIZE,
-    decode_postings_udf,
     make_encode_blocks_udf,
     max_kernel_col,
 )
@@ -58,6 +58,7 @@ from vexor_spark.operators.scoring import (
     score_postings_local,
     top_k,
 )
+from vexor_spark.plans.local import local_frame
 
 FORMAT_VERSION = 2  # plays the role of CACHE_VERSION (vexor/cache.py:28)
 
@@ -314,8 +315,9 @@ def build_and_write_index(
     doc_table.coalesce(n_doc_files).write.mode("overwrite").parquet(
         str(index_dir / "docs")
     )
-    doc_table.sparkSession.createDataFrame(
-        [(doc_count, avgdl)], "doc_count long, avg_doc_len double"
+    local_frame(
+        doc_table.sparkSession, [(doc_count, avgdl)],
+        "doc_count long, avg_doc_len double",
     ).write.mode("overwrite").parquet(str(index_dir / "stats"))
     doc_table.unpersist()
     t_meta = time.time()
@@ -870,7 +872,7 @@ class PersistedIndex:
         terms = prepare_query_terms(query)
         spark = self.spark
         if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            empty = spark.createDataFrame([], "doc_id long, score double")
+            empty = local_frame(spark, [], "doc_id long, score double")
             return top_k(empty, k)
         if prune:
             from vexor_spark.index.wand import pruned_scores
@@ -921,10 +923,11 @@ class PersistedIndex:
         qterms = {name: prepare_query_terms(q) for name, q in queries.items()}
         terms_all = sorted({t for ts in qterms.values() for t in ts})
         if not terms_all or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return spark.createDataFrame(
-                [], "query string, rank long, doc_id long, score double"
+            return local_frame(
+                spark, [], "query string, rank long, doc_id long, score double"
             )
-        qdf = spark.createDataFrame(
+        qdf = local_frame(
+            spark,
             [(n, t) for n, ts in qterms.items() for t in ts],
             "query string, term string",
         )

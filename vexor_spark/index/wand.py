@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vexor_spark.functions.codec import block_doc_ids_rows
+from vexor_spark.plans.local import local_frame
 
 # If candidate generation exceeds this, fall back to unpruned scoring
 # (collecting a huge candidate set to the driver would be the real cost).
@@ -599,7 +600,7 @@ def pruned_multi(
         )
         for t in present
     ]
-    thrdf = spark.createDataFrame(rows, "term string, thr_p double, thr_all double")
+    thrdf = local_frame(spark, rows, "term string, thr_p double, thr_all double")
     bounded = idx._matched_blocks(present).join(F.broadcast(thrdf), "term").persist()
     try:
         cand_rows = (
@@ -627,7 +628,7 @@ def pruned_multi(
             )
             needed = bounded.filter(passes_all | contains)
         elif candidates:
-            cdf = spark.createDataFrame([(int(c),) for c in candidates], "cand long")
+            cdf = local_frame(spark, [(int(c),) for c in candidates], "cand long")
             hit = bounded.join(
                 F.broadcast(cdf),
                 (F.col("cand") >= F.col("block_first"))
@@ -679,7 +680,7 @@ def pruned_scores(
     tdict = pidx.term_dict(terms)  # {term: (df, max_kernel)} — pyarrow, tiny
     present = [t for t in terms if t in tdict]
     if not present:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     # pidx.ub_factor corrects stored max_kernel / block_ub for avg-doc-
     # length drift since encode time (see storage.PersistedIndex).
     ub = {t: _idf(tdict[t][0], n) * tdict[t][1] * pidx.ub_factor for t in present}
@@ -804,7 +805,8 @@ def pruned_scores(
         return pidx._score_blocks(blocks)
 
     # --- candidate pass: docs in blocks whose bound can reach θ
-    bound_df = spark.createDataFrame(
+    bound_df = local_frame(
+        spark,
         [(t, idf_map[t], rest_ub[t]) for t in present],
         "term string, idf double, rest_ub double",
     )
@@ -836,7 +838,7 @@ def pruned_scores(
             metrics["candidates_driver"] = True
             metrics["pruned"] = True
         if not candidates:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, [], "doc_id long, score double")
         # the NEEDED block set (passing ∪ contains-a-candidate) is
         # also metadata-computable — the rescore becomes one broadcast
         # (term, block_id) semi-join, with no bound join, no
@@ -847,11 +849,9 @@ def pruned_scores(
         )
         if metrics is not None:
             metrics["blocks_decoded"] = len(need_keys)
-        ndf = spark.createDataFrame(need_keys, "term string, block_id int")
+        ndf = local_frame(spark, need_keys, "term string, block_id int")
         needed = blocks.join(F.broadcast(ndf), ["term", "block_id"], "left_semi")
-        cset_df = spark.createDataFrame(
-            [(int(c),) for c in candidates], "doc_id long"
-        )
+        cset_df = local_frame(spark, [(int(c),) for c in candidates], "doc_id long")
         return pidx._score_blocks(needed, candidates=cset_df)
     bounded = bounded.persist()
     try:
@@ -870,7 +870,7 @@ def pruned_scores(
             return pidx._score_blocks(blocks)
         candidates = sorted(r["doc_id"] for r in candidates_rows)
         if not candidates:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(spark, [], "doc_id long, score double")
 
         return _rescore(pidx, spark, bounded, candidates, metrics)
     finally:
@@ -974,7 +974,7 @@ def _rescore(pidx, spark, bounded, candidates, metrics=None):
     if contains_cand is not None:
         needed = bounded.filter(F.col("passes") | contains_cand)
     else:
-        cdf = spark.createDataFrame([(int(c),) for c in candidates], "cand long")
+        cdf = local_frame(spark, [(int(c),) for c in candidates], "cand long")
         hit = (
             bounded.join(
                 F.broadcast(cdf),
@@ -991,7 +991,7 @@ def _rescore(pidx, spark, bounded, candidates, metrics=None):
 
     if metrics is not None:
         metrics["blocks_decoded"] = needed.count()
-    cset_df = spark.createDataFrame([(int(c),) for c in candidates], "doc_id long")
+    cset_df = local_frame(spark, [(int(c),) for c in candidates], "doc_id long")
     # the index's own scorer: applies its tombstone filtering (the
     # segmented view) before the candidate semi-join + aggregation.
     return pidx._score_blocks(needed, candidates=cset_df)

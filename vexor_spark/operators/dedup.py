@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from vexor_spark.functions.fasthash import poly_hash_text_udf, poly_hash_tokens_udf
 from vexor_spark.operators.textstats import HASH_MOD, poly_hash_col
+from vexor_spark.plans.local import local_frame
 
 # Deterministic MinHash parameters (a, b): h_j(x) = (a·h(x) + b) % M.
 _rng = random.Random(0xC0FFEE)
@@ -350,6 +351,8 @@ def near_dup_pairs(
     # kernel pass over `docs` (minhash_per_doc), lazily checkpointed
     # because it feeds three consumers.
     if per_doc is None:
+        if docs is None:
+            raise ValueError("pass docs or per_doc")
         per_doc = minhash_per_doc(
             docs, tokens_col, shingle_n=shingle_n
         ).localCheckpoint(eager=False)
@@ -772,7 +775,8 @@ def dup_clusters(
                 metrics["rounds"] = 0
                 metrics["driver_pairs"] = len(head)
             spark = docs.sparkSession
-            lbl = spark.createDataFrame(
+            lbl = local_frame(
+                spark,
                 [(int(n), int(r)) for n, r in label.items()],
                 "node bigint, label bigint",
             )

@@ -21,9 +21,12 @@ catalog oracle suite:
   sketch 0. 64-bit arm reads bit (j mod 31) of the affine spread
   d_{j div 31} = (A_k·h+B_k)%M; 16-bit arm reads bit j of h directly.
 
-All arithmetic is exact in uint64 (h < 2^31, A_k < 2^21 ⇒ products
-< 2^52; per-bit pack sums < 2^57 for < 2^21 tokens/doc, the same lane
-argument as dedup.simhash64_table).
+All arithmetic is exact in uint64: every affine multiplier and offset
+(MinHash a_j, b_j and SimHash64 A_k, B_k) and every hash h is < 2^31, so
+a·h < 2^62 and a·h + b < 2^63, with at least one bit of headroom below
+2^64 (SIMHASH64_PARAMS[0] = 1103515245 ≈ 2^30 puts products near 2^61).
+Per-bit pack sums stay < 2^57 for < 2^21 tokens/doc, the same lane
+argument as dedup.simhash64_table.
 """
 
 from __future__ import annotations

@@ -28,6 +28,7 @@ from vexor_spark.constants import (
     RRF_DENSE_WEIGHT,
     RRF_K,
 )
+from vexor_spark.plans.local import local_frame
 
 LETTERS = "abcdefghijklmnopqrstuvwxyz"
 
@@ -179,15 +180,16 @@ def hashed_bow_scores(
     )
     if qnorm == 0:
         return docs.select("doc_id", F.lit(0.0).alias("dense_score"))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [
             (b, float(c) * idf_map.get(b, 0.0) ** 2)
             for b, c in sorted(qvec.items())
         ],
         "b long, q2 double",
     )
-    idf_df = spark.createDataFrame(
-        sorted((int(b), float(v)) for b, v in idf_map.items()), "b long, idf double"
+    idf_df = local_frame(
+        spark, sorted((int(b), float(v)) for b, v in idf_map.items()), "b long, idf double"
     )
     joined = (
         counts.join(F.broadcast(idf_df), "b", "left")
@@ -243,8 +245,8 @@ def hashed_bow_sketch(
     unrolls (the round-3 janino lesson), all codegen except the final
     per-row transform."""
     spark = counts.sparkSession
-    idf_df = spark.createDataFrame(
-        sorted((int(b), float(v)) for b, v in idf_map.items()), "b long, idf double"
+    idf_df = local_frame(
+        spark, sorted((int(b), float(v)) for b, v in idf_map.items()), "b long, idf double"
     )
     weighted = counts.join(F.broadcast(idf_df), "b", "left").select(
         "doc_id",

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from vexor_spark.constants import BM25_B, BM25_K1
 from vexor_spark.functions.tokenize import prepare_query_terms
+from vexor_spark.plans.local import local_frame
 
 
 def bm25_contribution_col(tf, doc_len, df, doc_count: float, avg_doc_len: float):
@@ -44,7 +45,7 @@ def bm25_contribution_col(tf, doc_len, df, doc_count: float, avg_doc_len: float)
 def query_terms_df(spark: SparkSession, query: str) -> DataFrame:
     """Prepared query terms as a 1-column DF (driver-side prep, T11)."""
     terms = prepare_query_terms(query)
-    return spark.createDataFrame([(t,) for t in terms], "term string")
+    return local_frame(spark, [(t,) for t in terms], "term string")
 
 
 def score_postings_df(
@@ -59,8 +60,8 @@ def score_postings_df(
     terms = prepare_query_terms(query) if isinstance(query, str) else list(query)
     if not terms or doc_count <= 0 or avg_doc_len <= 0:
         # Empty result with the right schema (vexor/bm25.py:72-73).
-        return spark.createDataFrame([], "doc_id long, score double")
-    qdf = spark.createDataFrame([(t,) for t in terms], "term string")
+        return local_frame(spark, [], "doc_id long, score double")
+    qdf = local_frame(spark, [(t,) for t in terms], "term string")
     matched = postings.join(F.broadcast(qdf), "term")
     exploded = matched.select(
         F.col("df").cast("double").alias("df"),
@@ -167,8 +168,8 @@ def bm25_topk_multi(
     ).collect()[0]
     doc_count, avg_doc_len = int(stats["n"]), float(stats["avgdl"] or 0.0)
     if not qrows or doc_count <= 0 or avg_doc_len <= 0:
-        return spark.createDataFrame([], "query string, rank long, doc_id long, score double")
-    qdf = spark.createDataFrame(qrows, "query string, term string")
+        return local_frame(spark, [], "query string, rank long, doc_id long, score double")
+    qdf = local_frame(spark, qrows, "query string, term string")
     terms_all = sorted({t for _, t in qrows})
     tf = (
         tokenized.select("doc_id", "doc_len", F.explode("tokens").alias("term"))

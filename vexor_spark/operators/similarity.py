@@ -297,22 +297,6 @@ def ivf_kmeans_centroids(
     return cents
 
 
-def ivf_cell_col(vec: Column, centroids: list[list[float]]) -> Column:
-    """argmax-cosine cell id; ties break to the lowest cell index.
-
-    NOTE: each cosine subtree appears ~3× here (greatest + two CASE
-    arms); with the codegen-unrolled dot/norm that re-expansion
-    inflates plans badly — use `with_ivf_cell` (projection-barrier
-    form) for DataFrame-level assignment."""
-    cos_cols = [cosine_lit_col(vec, c) for c in centroids]
-    best = F.greatest(*cos_cols)
-    expr = None
-    for j, c in enumerate(cos_cols):
-        cond = c == best
-        expr = F.when(cond, F.lit(j)) if expr is None else expr.when(cond, F.lit(j))
-    return expr.otherwise(F.lit(0)).cast("int")
-
-
 def with_ivf_cell(
     df: DataFrame, centroids: list[list[float]], *, vec_col: str = "embedding"
 ) -> DataFrame:

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vexor_spark.plans.local import local_frame
+
 
 def assign_doc_ids(
     df: DataFrame,
@@ -55,8 +57,10 @@ def assign_doc_ids(
         offsets[row["_pid"]] = acc
         acc += row["_cnt"]
     spark = df.sparkSession
-    offsets_df = spark.createDataFrame(
-        [(int(pid), int(off)) for pid, off in offsets.items()], "_pid int, _off long"
+    offsets_df = local_frame(
+        spark,
+        [(int(pid), int(off)) for pid, off in offsets.items()],
+        "_pid int, _off long",
     )
     return (
         local.join(F.broadcast(offsets_df), "_pid")

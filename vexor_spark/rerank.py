@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vexor_spark.index.build import InMemoryIndex
+from vexor_spark.plans.local import local_frame
 from vexor_spark.retrieval import dense_scores, resolve_rerank_candidates
 
 # A candidate is (doc_id, url, preview, score) — the engine analog of
@@ -80,7 +81,7 @@ def _clamp_candidates(
 def _to_ranked_df(index: InMemoryIndex, ordered: list[Candidate], k: int) -> DataFrame:
     spark = index.docs.sparkSession
     rows = [(i + 1, d, float(s)) for i, (d, _u, _p, s) in enumerate(ordered[:k])]
-    return spark.createDataFrame(rows, "rank long, doc_id long, score double")
+    return local_frame(spark, rows, "rank long, doc_id long, score double")
 
 
 # --- flashrank arm ----------------------------------------------------------

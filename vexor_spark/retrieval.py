@@ -47,6 +47,7 @@ from vexor_spark.operators.fusion import (
     rrf_topk,
 )
 from vexor_spark.operators.scoring import score_postings_df
+from vexor_spark.plans.local import local_frame
 
 # Dense backends: "letter" is the reference's own test embedding
 # (DummyBackend letter counts — kept for parity with
@@ -123,7 +124,7 @@ def ann_dense_candidates(
     spark = index.docs.sparkSession
     qsk = hashed_bow_query_sketch(query, index.hbow_idf())
     if not any(qsk):
-        return spark.createDataFrame([], "doc_id long, dense_score double")
+        return local_frame(spark, [], "doc_id long, dense_score double")
     cents = index.hbow_centroids(n_cells)
     cells = ivf_query_cells(qsk, cents, n_probe)
     probed = index.hbow_sketch_cells(n_cells).filter(
@@ -273,7 +274,7 @@ def weighted_rerank_search(
         .collect()
     )
     if not cand_rows:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     # Legacy arm: RAW query token list — duplicates counted, no 32-cap
     # (search_service.py:203-208).
@@ -283,7 +284,7 @@ def weighted_rerank_search(
             (i + 1, int(r["doc_id"]), float(r["dense_score"]))
             for i, r in enumerate(cand_rows[:k])
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     # rerank document: "{name} {path} {preview}".strip()
     # (search_service.py:158-160); tokenized with the regex path (T2
@@ -305,4 +306,4 @@ def weighted_rerank_search(
     # order (search_service.py:217).
     fused.sort(key=lambda t: -t[1])
     rows = [(i + 1, d, s) for i, (d, s) in enumerate(fused[:k])]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
