@@ -28,7 +28,8 @@ if not os.path.exists(idx_dir + "/meta.json"):
 pidx = PersistedIndex(spark, idx_dir)
 out.append(("persisted-index matched-blocks scan (term_bucket partition pruning + term pushdown)",
             plan_of(pidx._matched_blocks(["spark", "merge"]))))
-# capture the SCORED sub-plan: the final top_k is a bounded
+# capture the SCORED sub-plan (what search_distributed(prune=False)
+# ranks): the final top_k is a bounded
 # TakeOrdered collect + driver numbering, so the returned frame's own
 # plan is just the materialized rows.
 out.append(("distributed BM25 scoring over persisted index (pruned scan -> decode UDF -> explode -> two-phase hash agg; top_k then TakeOrders this)",
@@ -76,7 +77,7 @@ out.append(("hashed-BoW tf-idf dense scores (explode buckets -> two-phase counts
 # tombstones, row-format segment postings unioned in, broadcast merged
 # df map; exact BM25 over the layered view.
 import shutil, tempfile
-from vexor_spark.index.delta import SegmentedIndex, delta_update
+from vexor_spark.index.delta import delta_update
 from vexor_spark.index.merge import update_persisted_index
 from vexor_spark.sources.corpus import PAGES_SCHEMA, generate_pages_df, page_record
 dwork = tempfile.mkdtemp(prefix="plans_delta_w")
@@ -90,9 +91,9 @@ mut = pages0.withColumn(
     "html", F.encode(F.col("text"), "UTF-8")
 )
 delta_update(mut, dwork, didx)
-seg = SegmentedIndex(spark, didx)
-out.append(("segmented delta scoring (ONE base scan + ONE hive-partitioned segment-block scan [seg,term_bucket pruned] -> decode -> broadcast max-tombstone-layer join -> broadcast merged-df join -> agg; top_k then TakeOrders this)",
-            plan_of(seg.scored_rows("spark merge index"))))
+seg = PersistedIndex(spark, didx)
+out.append(("segmented delta scoring (ONE base scan + ONE hive-partitioned segment-block scan [seg,term_bucket pruned] -> decode with the tombstone filter -> agg -> top_k)",
+            plan_of(seg._score_blocks(seg._matched_blocks(["spark", "merge", "index"])))))
 out.append(("segmented multi-query batch serving (same layered read shared by the whole batch + broadcast (query,term) join + WindowGroupLimit per-query ranks)",
             plan_of(seg.search_distributed_multi({"q0": "spark merge", "q1": "index posting"}, 10))))
 shutil.rmtree(dwork, ignore_errors=True)

@@ -168,7 +168,7 @@ def test_unaffected_terms_pass_through_byte_identical(spark, tmp_path):
     work, idx = tmp_path / "work", tmp_path / "idx"
     update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=4)
 
-    from vexor_spark.functions.codec import decode_postings_udf
+    from vexor_spark.functions.codec import explode_blocks_rows
     from pyspark.sql import functions as F
 
     def _blobs(d):
@@ -183,12 +183,9 @@ def test_unaffected_terms_pass_through_byte_identical(spark, tmp_path):
             for r in spark.read.parquet(str(d / "docs"))
             .filter(F.col("url") == url).collect()
         }
-        rows = (
+        rows = explode_blocks_rows(
             spark.read.parquet(str(d / "postings"))
-            .select("term", F.explode(decode_postings_udf("blob")).alias("p"))
-            .select("term", F.col("p.doc_id").alias("doc_id"))
-            .collect()
-        )
+        ).select("term", "doc_id").collect()
         return {r["term"] for r in rows if r["doc_id"] in ids}
 
     url3 = _pages(3, "x")["url"]

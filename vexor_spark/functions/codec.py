@@ -38,14 +38,6 @@ from vexor_spark.constants import BM25_B, BM25_K1
 
 POSTING_BLOCK_SIZE = 128
 
-_POSTING_STRUCT = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("tf", IntegerType()),
-        StructField("doc_len", IntegerType()),
-    ]
-)
-
 
 def varint_encode(value: int, out: bytearray) -> None:
     while True:
@@ -100,23 +92,12 @@ def decode_posting_list(data: bytes) -> list[tuple[int, int, int]]:
     return out
 
 
-@F.pandas_udf(ArrayType(_POSTING_STRUCT))
-def decode_postings_udf(blobs: pd.Series) -> pd.Series:
-    def one(blob: bytes) -> list[dict]:
-        return [
-            {"doc_id": d, "tf": t, "doc_len": dl}
-            for d, t, dl in decode_posting_list(blob)
-        ]
-
-    return blobs.map(one)
-
-
 def explode_blocks_rows(blocks_df, *, tomb_bc=None, keep_layer: bool = False):
     """blocks(term, df, n, blob[, _layer]) → (term, df, doc_id, tf,
     doc_len[, _layer]) posting ROWS in one mapInPandas kernel: the
     whole Arrow batch's blobs decode through the vectorized varint
     pass (decode_blocks_np) and term/df replicate by np.repeat —
-    replacing decode_postings_udf + JVM explode, which built a Python
+    replacing a per-blob decode UDF + JVM explode, which built a Python
     dict PER POSTING inside the UDF, serialized them as Arrow
     array<struct>, and re-exploded rows JVM-side (round-7; guide §4.2:
     keep batch work in vectorized native code).

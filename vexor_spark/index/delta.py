@@ -42,7 +42,9 @@ Semantics:
   a surviving (url, chunk_index) keeps its id; new keys draw fresh ids
   from the manifest's next_doc_id counter — ids are never reused, so
   tombstones stay unambiguous).
-- SegmentedIndex.search_distributed is EXACT: scores equal a full
+- The read side is storage.PersistedIndex, which merges whatever
+  layers segments.json names (`SegmentedIndex` here is an alias of
+  it). Its search_distributed is EXACT over layers: scores equal a full
   rebuild of the current corpus (pinned by test_delta.py) because the
   BM25 statistics are merged exactly — df(term) = base df + Σ(df_new −
   df_removed), doc_count and avg_doc_len from the manifest's exact
@@ -76,27 +78,18 @@ from vexor_spark.index.checkpoint import (
     _bucket_col,
     build_chunks_resumable,
 )
-from vexor_spark.index.merge import DOC_COLS, full_merge
-from vexor_spark.constants import SCORE_ROUND_DP
-from vexor_spark.index.storage import PersistedIndex
-from vexor_spark.functions.tokenize import prepare_query_terms
+from vexor_spark.index.merge import full_merge
+from vexor_spark.index.storage import (
+    DOC_COLS,
+    PersistedIndex,
+    _manifest_path,
+    _pending_path,
+)
 from vexor_spark.operators.chunking import with_document
 from vexor_spark.operators import postings as postings_mod
 from vexor_spark.operators.postings import tokenize_docs
-from vexor_spark.operators.scoring import bm25_contribution_col, top_k
 from vexor_spark.plans.docids import assign_doc_ids
 from vexor_spark.plans.local import local_frame
-
-
-def _manifest_path(index_dir: Path) -> Path:
-    return index_dir / "segments.json"
-
-
-PENDING_NAME = "_pending_update.json"
-
-
-def _pending_path(index_dir: Path) -> Path:
-    return index_dir / PENDING_NAME
 
 
 def resolve_pending_changes(index_dir: Path, stage1: dict, manifest: dict) -> list[int]:
@@ -182,13 +175,6 @@ def _save_manifest(
     os.replace(tmp, path)
 
 
-def _clear_generation_locks(index_dir: Path) -> None:
-    """Drop gen markers when the manifest epoch ends (compaction / full
-    rebuild remove segments.json; generation restarts at 0)."""
-    for p in index_dir.glob("_gen.*.lock"):
-        p.unlink(missing_ok=True)
-
-
 def _reserve_seg_id(index_dir: Path, start: int) -> int:
     """Exclusively reserve a segment id via O_EXCL marker files so two
     concurrent updaters never write the same segments/*/seg=<n> tree —
@@ -266,7 +252,7 @@ def _apply_delta(
     meta = json.loads((index_dir / "meta.json").read_text())
     term_buckets = int(meta["term_buckets"])
 
-    view = SegmentedIndex(spark, index_dir, manifest=manifest)
+    view = PersistedIndex(spark, index_dir, manifest=manifest)
     old_changed = (
         view.docs_view()
         .withColumn("bucket", _bucket_col(F.col("url"), n_buckets))
@@ -474,489 +460,8 @@ def _apply_delta_retrying(
         return out
 
 
-class SegmentedIndex:
-    """Read-time merged view over base PersistedIndex + delta segments
-    (see module docstring for exactness guarantees)."""
-
-    def __init__(self, spark: SparkSession, index_dir: str | Path, *, manifest: dict | None = None):
-        self.spark = spark
-        self.dir = Path(index_dir)
-        self.base = PersistedIndex(spark, index_dir)
-        self.manifest = manifest if manifest is not None else load_manifest(spark, self.dir)
-        segs = self.manifest["segments"]
-        self.seg_ids = [s["seg"] for s in segs]
-        # Read-side FORMAT GUARD (round-5 ADVICE, medium): the round-5
-        # layout moved segments to block-encoded sibling hive trees
-        # (segments/postings/seg=N). A pre-existing row-format segment
-        # (old segments/seg=N/postings) would make _seg_read return
-        # None and this view silently serve base-only rows while the
-        # manifest-derived doc_count/avg_doc_len still include segment
-        # stats — silently wrong results. Fail loudly instead and name
-        # the migration (compact_segments folds layers into the base).
-        if segs:
-            bad = [s["seg"] for s in segs if s.get("format") != "blocks"]
-            legacy = sorted(
-                p.name for p in (self.dir / "segments").glob("seg=*")
-            ) if (self.dir / "segments").exists() else []
-            if bad or legacy or not (self.dir / "segments" / "postings").exists():
-                raise ValueError(
-                    f"segment layout mismatch in {self.dir}: "
-                    f"non-block segments {bad or legacy} "
-                    "(pre-round-5 row format). Run compact_segments() "
-                    "with the engine version that WROTE them to fold "
-                    "segments into the base, then re-apply updates."
-                )
-        self.doc_count = self.manifest["base_doc_count"] + sum(
-            s["n_new"] - s["n_removed"] for s in segs
-        )
-        len_sum = self.manifest["base_len_sum"] + sum(
-            s["len_new"] - s["len_removed"] for s in segs
-        )
-        self.avg_doc_len = (len_sum / self.doc_count) if self.doc_count else 0.0
-        # Stored block_ub / max_kernel (base AND segments — _apply_delta
-        # encodes segments with the base's ub basis) were computed with
-        # meta's ub_avg_doc_len; inflate bounds for drift of the MERGED
-        # avg_doc_len, exactly like PersistedIndex.ub_factor.
-        meta = json.loads((self.dir / "meta.json").read_text())
-        basis = float(meta.get("ub_avg_doc_len", meta.get("avg_doc_len", 0.0)) or 0.0)
-        self.ub_factor: float = (
-            max(1.0, self.avg_doc_len / basis) if basis > 0 else 1.0
-        )
-
-    def _seg_root(self, sub: str) -> Path:
-        return self.dir / "segments" / sub
-
-    def _seg_read(self, sub: str) -> DataFrame | None:
-        """One hive-partitioned read over segments/<sub>/seg=N/... —
-        the `seg` partition column identifies the layer; filters on it
-        prune directories. None when no live segments / no data.
-        The DataFrame (and with it Spark's file-index listing — ~3k
-        files at 8 segments × 64 buckets) is cached per index instance:
-        listing is paid once at first use, not per query. Reopen the
-        SegmentedIndex after updates, like PersistedIndex."""
-        cache = getattr(self, "_seg_frames", None)
-        if cache is None:
-            cache = self._seg_frames = {}
-        if sub in cache:
-            return cache[sub]
-        root = self._seg_root(sub)
-        if not self.seg_ids or not root.exists():
-            cache[sub] = None
-            return None
-        cache[sub] = (
-            self.spark.read.option("basePath", str(root))
-            .parquet(str(root))
-            .filter(F.col("seg").isin([int(s) for s in self.seg_ids]))
-        )
-        return cache[sub]
-
-    def _tombstone_max(self) -> DataFrame | None:
-        """(doc_id, _tmax) — the HIGHEST layer that tombstoned each
-        doc_id, from one scan of the tombstone tree. A row written at
-        layer L survives iff _tmax is null or _tmax ≤ L (a layer's own
-        re-add outlives its own tombstone; later tombstones kill all
-        lower layers). One join replaces the per-layer anti-joins —
-        plan size stays O(1) in segment count."""
-        if getattr(self, "_tomb_max", "absent") != "absent":
-            return self._tomb_max
-        tombs = self._seg_read("tombstones")
-        if tombs is None:
-            self._tomb_max = None
-            return None
-        out = tombs.groupBy("doc_id").agg(F.max("seg").alias("_tmax"))
-        # manifest knows the exact tombstone volume — broadcast the
-        # aggregated map when it is small (the common steady state), so
-        # the layered read costs a map-side hash join instead of
-        # shuffling the decoded posting rows.
-        if sum(s["n_removed"] for s in self.manifest["segments"]) <= 2_000_000:
-            out = F.broadcast(out)
-        self._tomb_max = out
-        return out
-
-    # Above this volume the driver stops materializing the tombstone
-    # map locally (θ walks fall back to unpruned, reads use the join
-    # path) — ~80 MB of int64 pairs; compaction's tombstone_ratio
-    # budget keeps real indexes far below it.
-    TOMB_DRIVER_MAX = 5_000_000
-
-    def _tombstone_arrays(self):
-        """(sorted doc_ids int64, tmax int64) — the tombstone map as
-        driver numpy arrays (one pyarrow read, cached per instance), or
-        None when there are no tombstones or the volume exceeds
-        TOMB_DRIVER_MAX. Feeds BOTH the θ walk's exclusion set and the
-        decode-time filter broadcast (codec.explode_blocks_rows)."""
-        if getattr(self, "_tomb_np", "absent") != "absent":
-            return self._tomb_np
-        import numpy as np
-        import pyarrow.dataset as pads
-
-        total = sum(s["n_removed"] for s in self.manifest["segments"])
-        root = self._seg_root("tombstones")
-        if not self.seg_ids or total == 0 or total > self.TOMB_DRIVER_MAX or not root.exists():
-            self._tomb_np = None
-            return None
-        ds = pads.dataset(str(root), format="parquet", partitioning="hive")
-        tbl = ds.to_table(
-            columns=["doc_id", "seg"],
-            filter=pads.field("seg").isin([int(s) for s in self.seg_ids]),
-        )
-        ids = tbl.column("doc_id").to_numpy().astype(np.int64, copy=True)
-        segs = tbl.column("seg").to_numpy().astype(np.int64, copy=True)
-        if len(ids) == 0:
-            self._tomb_np = None
-            return None
-        order = np.lexsort((segs, ids))  # by doc_id, then seg asc
-        ids_s, segs_s = ids[order], segs[order]
-        uniq, starts = np.unique(ids_s, return_index=True)
-        ends = np.r_[starts[1:], len(ids_s)] - 1
-        self._tomb_np = (uniq, segs_s[ends])  # max seg per id
-        return self._tomb_np
-
-    def _tombstone_bc(self):
-        """Spark broadcast of _tombstone_arrays (cached), or None."""
-        if getattr(self, "_tomb_bcast", "absent") != "absent":
-            return self._tomb_bcast
-        arrays = self._tombstone_arrays()
-        self._tomb_bcast = (
-            self.spark.sparkContext.broadcast(arrays) if arrays is not None else None
-        )
-        return self._tomb_bcast
-
-    def docs_view(self) -> DataFrame:
-        """Current doc table: per doc_id the row from the HIGHEST layer,
-        dropped when a later layer tombstoned it."""
-        from pyspark.sql import Window
-
-        allrows = (
-            self.spark.read.parquet(str(self.dir / "docs"))
-            .select(*DOC_COLS).withColumn("_layer", F.lit(0))
-        )
-        seg_docs = self._seg_read("docs")
-        if seg_docs is not None:
-            allrows = allrows.unionByName(
-                seg_docs.select(*DOC_COLS, F.col("seg").cast("int").alias("_layer"))
-            )
-        w = Window.partitionBy("doc_id").orderBy(F.desc("_layer"))
-        winner = (
-            allrows.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        tomb_max = self._tombstone_max()
-        if tomb_max is None:
-            return winner.drop("_layer")
-        return (
-            winner.join(tomb_max, "doc_id", "left")
-            .filter(F.col("_tmax").isNull() | (F.col("_tmax") <= F.col("_layer")))
-            .drop("_layer", "_tmax")
-        )
-
-    def term_df_map(self, terms: list[str]) -> dict[str, int]:
-        """Exact merged df per query term: base dict df + Σ seg (df_new
-        − df_removed) — one pyarrow partition-pruned read over the
-        dfdelta tree (sums are order-independent across layers).
-        Memoized per term set: one query touches this up to three times
-        (term_dict, _matched_blocks, scored_rows)."""
-        key = tuple(sorted(terms))
-        memo = getattr(self, "_dfmap_memo", None)
-        if memo is None:
-            memo = self._dfmap_memo = {}
-        if key in memo:
-            return dict(memo[key])
-        import pyarrow.dataset as pads
-
-        from vexor_spark.index.storage import term_buckets_for
-
-        out = {t: d for t, (d, _mk) in self.base.term_dict(terms).items()}
-        root = self._seg_root("dfdelta")
-        if self.seg_ids and root.exists():
-            ds = pads.dataset(str(root), format="parquet", partitioning="hive")
-            tbl = ds.to_table(
-                columns=["term", "df_new", "df_removed"],
-                filter=pads.field("seg").isin([int(s) for s in self.seg_ids])
-                & pads.field("term_bucket").isin(
-                    sorted(set(term_buckets_for(
-                        self.spark, terms, self.base.term_buckets
-                    ).values()))
-                )
-                & pads.field("term").isin(terms),
-            )
-            for t, dn, dr in zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("df_new").to_pylist(),
-                tbl.column("df_removed").to_pylist(),
-            ):
-                out[t] = out.get(t, 0) + int(dn) - int(dr)
-        result = {t: d for t, d in out.items() if d > 0}
-        if len(memo) > 256:
-            memo.clear()
-        memo[key] = dict(result)
-        return result
-
-    def _seg_max_kernels(self, terms: list[str]) -> dict[str, float]:
-        """{term: max block_ub across live segment layers} — pyarrow
-        metadata-only read (no blobs) over the segment postings tree,
-        seg/term_bucket/term pruned. Needed so query-time upper bounds
-        cover segment postings too: a term's merged ub must dominate
-        contributions from EVERY live layer, not just the base dict."""
-        import pyarrow.dataset as pads
-
-        from vexor_spark.index.storage import term_buckets_for
-
-        root = self._seg_root("postings")
-        if not self.seg_ids or not root.exists():
-            return {}
-        ds = pads.dataset(str(root), format="parquet", partitioning="hive")
-        tbl = ds.to_table(
-            columns=["term", "block_ub"],
-            filter=pads.field("seg").isin([int(s) for s in self.seg_ids])
-            & pads.field("term_bucket").isin(
-                sorted(set(term_buckets_for(
-                    self.spark, terms, self.base.term_buckets
-                ).values()))
-            )
-            & pads.field("term").isin(terms),
-        )
-        out: dict[str, float] = {}
-        for t, ub in zip(
-            tbl.column("term").to_pylist(), tbl.column("block_ub").to_pylist()
-        ):
-            if ub is not None and float(ub) > out.get(t, 0.0):
-                out[t] = float(ub)
-        return out
-
-    def term_dict(self, terms: list[str]) -> dict[str, tuple[int, float]]:
-        """{term: (merged df, max kernel over ALL live layers)} — the
-        wand.py pruning contract (PersistedIndex.term_dict's shape with
-        layer-merged statistics)."""
-        df_map = self.term_df_map(terms)
-        base_mk = {t: mk for t, (_d, mk) in self.base.term_dict(terms).items()}
-        seg_mk = self._seg_max_kernels(terms)
-        return {
-            t: (d, max(base_mk.get(t, 0.0), seg_mk.get(t, 0.0)))
-            for t, d in df_map.items()
-        }
-
-    def _matched_blocks(self, terms: list[str]) -> DataFrame:
-        """Block rows for the query terms across base + segment layers
-        — ONE bucket-pruned base scan ∪ ONE hive-pruned segment scan,
-        `_layer` marking the layer, `df` OVERRIDDEN with the exact
-        merged document frequency (segment rows carry segment-local df;
-        base rows pre-update df — both wrong for scoring the merged
-        view)."""
-        from vexor_spark.index.storage import term_buckets_for
-
-        df_map = self.term_df_map(terms)
-        present = [t for t in terms if t in df_map]
-        cols = ["term", "df", "block_id", "n", "block_first", "block_last",
-                "block_ub", "blob", "_layer"]
-        # every row's term passed the isin(present) filter, so the map
-        # lookup can't miss (element_at on maps throws under ANSI only
-        # for absent keys).
-        mdf = F.element_at(
-            F.create_map(*[
-                lit for t in present for lit in (F.lit(t), F.lit(int(df_map[t])))
-            ]),
-            F.col("term"),
-        ).cast("long") if present else F.lit(0).cast("long")
-        base = (
-            self.base._matched_blocks(present)
-            .withColumn("df", mdf)
-            .select(*cols)
-        )
-        segs = self._seg_read("postings")
-        if segs is None:
-            return base
-        buckets = sorted(
-            set(term_buckets_for(self.spark, present or terms, self.base.term_buckets).values())
-        )
-        seg_blocks = (
-            segs.filter(
-                F.col("term_bucket").isin(buckets) & F.col("term").isin(present)
-            )
-            .withColumn("_layer", F.col("seg").cast("int"))
-            .withColumn("df", mdf)
-            .select(*cols)
-        )
-        return base.unionByName(seg_blocks)
-
-    def _exploded_rows(self, blocks: DataFrame) -> DataFrame:
-        """blocks → live (term, df, doc_id, tf, doc_len) rows. The
-        tombstone filter is applied AT DECODE TIME via the broadcast
-        map (codec.explode_blocks_rows) — no join stage; falls back to
-        the broadcast max-layer join only when the tombstone volume
-        exceeds the driver budget."""
-        from vexor_spark.functions.codec import explode_blocks_rows
-
-        bc = self._tombstone_bc()
-        if bc is not None:
-            # decode + tombstone filter fused in ONE mapInPandas
-            # kernel (codec.explode_blocks_rows): dead postings die
-            # inside the numpy batch — no join stage, no per-posting
-            # Python structs, no JVM explode.
-            return explode_blocks_rows(blocks, tomb_bc=bc)
-        rows = explode_blocks_rows(blocks, keep_layer=True)
-        tomb_max = self._tombstone_max()
-        if tomb_max is not None:
-            rows = rows.join(tomb_max, "doc_id", "left").filter(
-                F.col("_tmax").isNull() | (F.col("_tmax") <= F.col("_layer"))
-            ).drop("_tmax")
-        return rows.drop("_layer")
-
-    def _score_blocks(
-        self, blocks: DataFrame, candidates: DataFrame | None = None
-    ) -> DataFrame:
-        """blocks (with merged df + _layer) → live (doc_id, score) —
-        the layered analog of PersistedIndex._score_blocks, and the
-        fallback/rescore hook wand.pruned_scores calls."""
-        exploded = self._exploded_rows(blocks)
-        if candidates is not None:
-            exploded = exploded.join(F.broadcast(candidates), "doc_id", "left_semi")
-        contrib = bm25_contribution_col(
-            F.col("tf"), F.col("doc_len"), F.col("df"),
-            float(self.doc_count), float(self.avg_doc_len),
-        )
-        return (
-            exploded.withColumn("contribution", contrib)
-            .groupBy("doc_id")
-            .agg(F.sum("contribution").alias("score"))
-        )
-
-    def _term_blocks_for_theta(self, t_star: str):
-        """θ-walk inputs (wand): t_star's BASE block METADATA rows
-        (block_id, first, last, block_ub, n — blobs fetched lazily via
-        _theta_blobs, see PersistedIndex) + the tombstoned-doc
-        exclusion set. Tombstoned docs must not contribute to θ (their
-        base postings are dead — counting one would break θ's
-        lower-bound property); segment postings are ignored, which only
-        weakens θ (sound). Returns ([], None) when the tombstone map
-        exceeds the driver budget — wand then falls back to unpruned
-        scoring."""
-        total = sum(s["n_removed"] for s in self.manifest["segments"])
-        if total > self.TOMB_DRIVER_MAX:
-            return [], None
-        arrays = self._tombstone_arrays()
-        meta, _exc = self.base._term_blocks_for_theta(t_star)
-        return meta, (arrays[0] if arrays is not None else None)
-
-    def _theta_blobs(self, term: str, bids: list):
-        """Lazy blob fetch for the θ machinery — θ walks base blocks
-        only, so delegate to the base index."""
-        return self.base._theta_blobs(term, bids)
-
-    def _theta_blobs_multi(self, want: dict):
-        return self.base._theta_blobs_multi(want)
-
-    def prefetch_theta_meta(self, terms: list) -> None:
-        self.base.prefetch_theta_meta(terms)
-
-    def search_distributed(
-        self, query: str, k: int = 10, *, prune: bool = True,
-        metrics: dict | None = None, round_dp: int | None = SCORE_ROUND_DP,
-    ) -> DataFrame:
-        """(rank, doc_id, score) over the merged view — exact (equal to
-        a full rebuild of the current corpus, test_delta.py); ranks on
-        round_dp-rounded scores by default (round-7 public ranking
-        contract, matching PersistedIndex.search_distributed). With
-        prune=True (default), block-max pruning runs over ALL layers
-        with a tombstone-aware θ (round-5 verdict item 1: under the
-        cadence-4 compaction default the production index almost always
-        has live segments, so the steady-state path must prune too)."""
-        terms = prepare_query_terms(query)
-        if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return top_k(local_frame(self.spark, [], "doc_id long, score double"), k)
-        if prune:
-            from vexor_spark.index.wand import pruned_scores
-
-            slack = 1.5 * 10.0 ** (-round_dp) if round_dp is not None else 0.0
-            scored = pruned_scores(self, terms, k, metrics=metrics, theta_slack=slack)
-        else:
-            scored = self.scored_rows(query)
-            if scored is None:
-                scored = local_frame(self.spark, [], "doc_id long, score double")
-        return top_k(scored, k, round_dp=round_dp)
-
-    def scored_rows(self, query: str) -> DataFrame | None:
-        """Lazy unpruned (doc_id, score) over the layered view (the
-        plan top_k ranks); None when no query term survives the merged
-        df map."""
-        terms = prepare_query_terms(query)
-        if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return None
-        present = [t for t in terms if t in self.term_df_map(terms)]
-        if not present:
-            return None
-        return self._score_blocks(self._matched_blocks(present))
-
-    def search_distributed_multi(
-        self, queries: dict[str, str], k: int = 10, *,
-        prune: bool = True, metrics: dict | None = None,
-        round_dp: int | None = SCORE_ROUND_DP,
-    ) -> DataFrame:
-        """(query, rank, doc_id, score) for a WHOLE query batch in ONE
-        job over the layered view — PersistedIndex.
-        search_distributed_multi's shape (shared scan, one decode per
-        matched block across ALL queries, broadcast (query, term)
-        replication, WindowGroupLimit-bounded per-query ranks) with the
-        segment layers unioned in and per-term df overridden by the
-        exact merged map. Rank-identical to per-query
-        search_distributed by construction (same rows, same merged
-        stats, same (score desc, doc_id asc) order; pinned in
-        test_delta.py). This is the steady-state serving path under
-        continuous updates — the 4-8× batch amortization no longer
-        requires a freshly-compacted base."""
-        from pyspark.sql import Window
-
-        spark = self.spark
-        empty_schema = "query string, rank long, doc_id long, score double"
-        qterms = {name: prepare_query_terms(q) for name, q in queries.items()}
-        terms_all = sorted({t for ts in qterms.values() for t in ts})
-        if not terms_all or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return local_frame(spark, [], empty_schema)
-        df_map = self.term_df_map(terms_all)
-        present = [t for t in terms_all if t in df_map]
-        if not present:
-            return local_frame(spark, [], empty_schema)
-        qdf = local_frame(
-            spark,
-            [(n, t) for n, ts in qterms.items() for t in ts if t in df_map],
-            "query string, term string",
-        )
-        contrib = bm25_contribution_col(
-            F.col("tf"), F.col("doc_len"), F.col("df"),
-            float(self.doc_count), float(self.avg_doc_len),
-        )
-        # merged df rides on the block rows (_matched_blocks) and the
-        # tombstone filter happens at decode time (_exploded_rows) — no
-        # dfdf join, no tombstone join. With prune=True the shared
-        # decode set shrinks to the blocks some query still needs
-        # (wand.pruned_multi; tombstone-aware θ via
-        # _term_blocks_for_theta, guaranteed fallback otherwise).
-        exploded = None
-        if prune:
-            from vexor_spark.index.wand import pruned_multi
-
-            slack = 1.5 * 10.0 ** (-round_dp) if round_dp is not None else 0.0
-            exploded = pruned_multi(
-                self, qterms, k, metrics=metrics, theta_slack=slack
-            )
-        if exploded is None:
-            exploded = self._exploded_rows(self._matched_blocks(present))
-        scored = (
-            exploded
-            .withColumn("contribution", contrib)
-            .join(F.broadcast(qdf), "term")
-            .groupBy("query", "doc_id")
-            .agg(F.sum("contribution").alias("score"))
-        )
-        if round_dp is not None:
-            scored = scored.withColumn("score", F.round("score", round_dp))
-        w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query", "rank", F.col("doc_id").cast("long").alias("doc_id"), "score")
-        )
+# The reader lives in storage.py; this name stays for existing callers.
+SegmentedIndex = PersistedIndex
 
 
 def compact_segments(
@@ -975,13 +480,11 @@ def compact_segments(
     tb = term_buckets or int(meta["term_buckets"])
     manifest = load_manifest(spark, index_dir)
     n = len(manifest["segments"])
+    # full_merge drops the segment trees, manifest and gen markers once
+    # the new base is written; a pending marker from a crashed delta is
+    # subsumed too — the full merge re-read the current chunk store,
+    # change included.
     summary = full_merge(spark, work_dir, index_dir, term_buckets=tb)
-    shutil.rmtree(index_dir / "segments", ignore_errors=True)
-    _manifest_path(index_dir).unlink(missing_ok=True)
-    _clear_generation_locks(index_dir)  # new epoch: generation restarts
-    # a pending marker from a crashed delta is subsumed: the full merge
-    # just re-read the current chunk store, change included.
-    _pending_path(index_dir).unlink(missing_ok=True)
     summary["action"] = "compact_segments"
     summary["segments_folded"] = n
     return summary

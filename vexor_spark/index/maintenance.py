@@ -34,7 +34,7 @@ After every call the compaction budget is checked: more than
 read-cost bound that round 4 left as a manual step.
 
 Crash safety: all routes share the durable pending marker
-(delta._pending_path / checkpoint.build_chunks_resumable pending_file)
+(storage._pending_path / checkpoint.build_chunks_resumable pending_file)
 — stage 1 records the changed-bucket set before committing lineage, so
 a crash between lineage and the route's own commit resumes the work on
 retry instead of reporting noop over a silently-stale index.
@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import shutil
 import time
 from pathlib import Path
 
@@ -60,9 +59,6 @@ from vexor_spark.index.checkpoint import (
 )
 from vexor_spark.index.delta import (
     _apply_delta_retrying,
-    _clear_generation_locks,
-    _manifest_path,
-    _pending_path,
     compact_segments,
     load_manifest,
     resolve_pending_changes,
@@ -72,6 +68,7 @@ from vexor_spark.index.merge import (
     _incremental_merge,
     full_merge,
 )
+from vexor_spark.index.storage import _manifest_path, _pending_path, live_doc_count
 from vexor_spark.operators.chunking import with_document
 from vexor_spark.operators.postings import tokenize_docs
 
@@ -199,33 +196,11 @@ def compaction_due(
     segs = manifest["segments"]
     if len(segs) > max_segments:
         return f"segments {len(segs)} > {max_segments}"
-    doc_count = manifest["base_doc_count"] + sum(
-        s["n_new"] - s["n_removed"] for s in segs
-    )
+    doc_count = live_doc_count(manifest)
     tombs = sum(s["n_removed"] for s in segs)
     if doc_count > 0 and tombs / doc_count > tombstone_ratio:
         return f"tombstones {tombs}/{doc_count} > {tombstone_ratio}"
     return None
-
-
-def _full_rebuild(
-    spark: SparkSession,
-    work_dir: Path,
-    index_dir: Path,
-    *,
-    term_buckets: int,
-    block_size: int,
-) -> dict:
-    """Full merge over the (already-current) chunk store, clearing any
-    segment layers and the pending marker — the big-change route."""
-    summary = full_merge(
-        spark, work_dir, index_dir, term_buckets=term_buckets, block_size=block_size
-    )
-    shutil.rmtree(index_dir / "segments", ignore_errors=True)
-    _manifest_path(index_dir).unlink(missing_ok=True)
-    _clear_generation_locks(index_dir)
-    _pending_path(index_dir).unlink(missing_ok=True)
-    return summary
 
 
 def update_index(
@@ -245,8 +220,8 @@ def update_index(
     """The unified maintenance entry point (module docstring has the
     routing table and the measurements behind it). Returns the route's
     summary dict with `route`, `route_reason`, `shape` (when measured)
-    and `compaction` attached. Query the result via SegmentedIndex —
-    it degrades to the plain base view when no segments are live."""
+    and `compaction` attached. Query the result via PersistedIndex —
+    it merges whatever segment layers are live."""
     work_dir, index_dir = Path(work_dir), Path(index_dir)
     spark = pages.sparkSession
     t0 = time.time()
@@ -275,13 +250,15 @@ def update_index(
             # report the LIVE view's doc count — base meta alone
             # understates it when delta segments are stacked on top
             # (round-5 ADVICE: metrics consumers saw pre-segment counts)
-            live_docs = manifest["base_doc_count"] + sum(
-                s["n_new"] - s["n_removed"] for s in manifest["segments"]
-            ) if manifest["segments"] else meta["doc_count"]
+            live_docs = (
+                live_doc_count(manifest) if manifest["segments"] else meta["doc_count"]
+            )
             summary = {"action": "noop", "docs": live_docs, "secs": 0.0}
             route, reason = "noop", "no_change"
         elif ratio > rebuild_ratio:
-            summary = _full_rebuild(
+            # full_merge also drops any segment layers and the pending
+            # marker — the new base holds the whole current corpus
+            summary = full_merge(
                 spark, work_dir, index_dir, term_buckets=tb, block_size=bs
             )
             route = "full_rebuild"

@@ -49,14 +49,19 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vexor_spark.functions.codec import POSTING_BLOCK_SIZE, decode_postings_udf
+from vexor_spark.functions.codec import POSTING_BLOCK_SIZE, explode_blocks_rows
 from vexor_spark.index.checkpoint import (
     DEFAULT_INPUT_BUCKETS,
     _append_metrics,
     _bucket_col,
     build_chunks_resumable,
 )
-from vexor_spark.index.storage import FORMAT_VERSION, _sorted_block_rows
+from vexor_spark.index.storage import (
+    DOC_COLS,
+    FORMAT_VERSION,
+    _sorted_block_rows,
+    drop_segment_layers,
+)
 from vexor_spark.operators.chunking import with_document
 from vexor_spark.operators import postings as postings_mod
 from vexor_spark.operators.postings import corpus_stats, tokenize_docs
@@ -64,11 +69,6 @@ from vexor_spark.plans.docids import assign_doc_ids
 from vexor_spark.plans.local import local_frame
 
 REBUILD_RATIO = 0.5  # reference index_service.py:29 max_incremental_ratio
-
-DOC_COLS = [
-    "doc_id", "url", "chunk_index", "label", "preview",
-    "start_line", "end_line", "doc_len",
-]
 
 
 def _write_meta(index_dir: Path, *, term_buckets: int, block_size: int,
@@ -101,7 +101,9 @@ def full_merge(
     block_size: int = POSTING_BLOCK_SIZE,
 ) -> dict:
     """Chunk store → doc ids → tf → streamed blocks → full artifact
-    rewrite (build_and_write_index's tail, reading stage-1 output)."""
+    rewrite (build_and_write_index's tail, reading stage-1 output).
+    The new base holds the whole current corpus, so any segment layers
+    are dropped once it is written (storage.drop_segment_layers)."""
     work_dir, index_dir = Path(work_dir), Path(index_dir)
     t0 = time.time()
     chunks = with_document(spark.read.parquet(str(work_dir / "chunks")).drop("bucket"))
@@ -132,6 +134,7 @@ def full_merge(
     doc_table.unpersist()
     _write_meta(index_dir, term_buckets=term_buckets, block_size=block_size,
                 doc_count=doc_count, avg_doc_len=avgdl, ub_basis=avgdl)
+    drop_segment_layers(index_dir)
     return {"action": "full", "docs": doc_count, "secs": round(time.time() - t0, 3)}
 
 
@@ -226,15 +229,13 @@ def _incremental_merge(
             F.col("term_bucket").isin(affected)
         )
         passthrough = old_block_rows.join(affected_terms, "term", "left_anti")
-        old_rows = (
+        old_rows = explode_blocks_rows(
             old_block_rows.join(affected_terms, "term", "left_semi")
-            .select("term", F.explode(decode_postings_udf("blob")).alias("p"))
-            .select(
-                "term",
-                F.col("p.doc_id").alias("doc_id"),
-                F.col("p.tf").alias("tf"),
-                F.col("p.doc_len").alias("doc_len"),
-            )
+        ).select(
+            "term",
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("tf").cast("int").alias("tf"),
+            F.col("doc_len").cast("int").alias("doc_len"),
         )
         surviving = old_rows.join(removed_ids, "doc_id", "left_anti")
         merged_tf = surviving.unionByName(

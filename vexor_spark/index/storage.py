@@ -15,6 +15,10 @@ SURVEY §7 Phase 2):
       docs/        (doc_id, url, chunk_index, preview, lines, doc_len)
       stats/       (doc_count, avg_doc_len)                 — one row, in
                    one file (written from a LocalRelation)
+      segments.json, segments/
+                   live delta-segment layers over the base (written by
+                   delta.py, layout in its docstring); absent = the
+                   base is the whole view
 
 Posting lists are cut into fixed-size blocks, each independently
 delta-gap+varint encoded and carrying its doc-id range and max BM25
@@ -24,22 +28,35 @@ distributed analog of the reference's PK term seek
 bucket dirs; Parquet row-group min/max stats on `term` skip within a
 bucket; block rows let block-max pruning skip work BEFORE decoding.
 
+`PersistedIndex` is the one reader: a view over the base plus however
+many segment layers are live (zero after a build or a compaction).
+
 Query paths:
 - `search_local` — zero-Spark-job driver path: Python XXH64 buckets the
   terms, pyarrow reads only those partitions, decode+score in Python
   (the serving path; analog of vexor/cache.py:1492-1535 →
-  bm25.score_postings).
+  bm25.score_postings). Base blocks only: refuses a layered view.
 - `search_distributed(prune=False)` — decode matched blocks executor-
-  side, explode, column-arithmetic BM25, one groupBy(doc_id).
+  side, explode, column-arithmetic BM25, one groupBy(doc_id). Over
+  live layers, segment blocks union in, df is the merged df, and
+  tombstoned postings drop at decode time.
 - `search_distributed(prune=True)` — block-max pruning (exact, see
   wand.py): a θ lower bound from the highest-impact term's own top-k,
   candidate generation from only the blocks whose upper bound can reach
-  θ, exact rescore restricted to candidates.
+  θ, exact rescore restricted to candidates. Candidates come from the
+  driver's block metadata on a zero-layer view, from a Spark pass over
+  every layer's blocks otherwise.
+- `search_distributed_multi` — a whole query batch in one job, over the
+  same layered block frame.
+
+Writers that replace the base (`write_index`, `build_and_write_index`,
+merge.full_merge) drop any segment layers left over from the old base.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,14 +70,44 @@ from vexor_spark.functions.codec import (
 )
 from vexor_spark.functions.tokenize import prepare_query_terms
 from vexor_spark.index.build import InMemoryIndex
-from vexor_spark.operators.scoring import (
-    bm25_contribution_col,
-    score_postings_local,
-    top_k,
-)
+from vexor_spark.operators.scoring import bm25_contribution_col, top_k
 from vexor_spark.plans.local import local_frame
 
 FORMAT_VERSION = 2  # plays the role of CACHE_VERSION (vexor/cache.py:28)
+
+DOC_COLS = [
+    "doc_id", "url", "chunk_index", "label", "preview",
+    "start_line", "end_line", "doc_len",
+]
+
+
+def _manifest_path(index_dir: Path) -> Path:
+    return index_dir / "segments.json"
+
+
+def _pending_path(index_dir: Path) -> Path:
+    return index_dir / "_pending_update.json"
+
+
+def live_doc_count(manifest: dict) -> int:
+    """Docs in the layered view a segment manifest describes: the
+    base's docs plus every live segment's net change."""
+    return manifest["base_doc_count"] + sum(
+        s["n_new"] - s["n_removed"] for s in manifest["segments"]
+    )
+
+
+def drop_segment_layers(index_dir: Path) -> None:
+    """Remove every delta-segment artifact: the segment trees, the
+    manifest, its generation markers (the next epoch restarts at 0) and
+    the pending-update marker. Writers that replace the base call this
+    once the new base is written — layers computed against the old base
+    must never merge over a new one."""
+    shutil.rmtree(index_dir / "segments", ignore_errors=True)
+    _manifest_path(index_dir).unlink(missing_ok=True)
+    for p in index_dir.glob("_gen.*.lock"):
+        p.unlink(missing_ok=True)
+    _pending_path(index_dir).unlink(missing_ok=True)
 
 
 def _topk_np(ids, scores, k: int, *, round_dp: int | None = None) -> list[tuple[int, int, float]]:
@@ -242,6 +289,7 @@ def write_index(
         "ub_avg_doc_len": index.avg_doc_len,  # kernel-encode basis (merge.py)
     }
     (index_dir / "meta.json").write_text(json.dumps(meta, indent=2))
+    drop_segment_layers(index_dir)
 
 
 def build_and_write_index(
@@ -270,10 +318,7 @@ def build_and_write_index(
     t0 = time.time()
     intermediates: list = []
     docs = build_docs(pages, persisted_out=intermediates, mode=mode)
-    doc_table = docs.select(
-        "doc_id", "url", "chunk_index", "label", "preview",
-        "start_line", "end_line", "doc_len",
-    ).persist()
+    doc_table = docs.select(*DOC_COLS).persist()
     row = corpus_stats(doc_table.select("doc_id", "doc_len")).collect()[0]
     doc_count = int(row["doc_count"])
     avgdl = float(row["avg_doc_len"]) if row["avg_doc_len"] else 0.0
@@ -335,6 +380,7 @@ def build_and_write_index(
         "ub_avg_doc_len": avgdl,  # kernel-encode basis (merge.py)
     }
     (index_dir / "meta.json").write_text(json.dumps(meta, indent=2))
+    drop_segment_layers(index_dir)
     return {
         "docs": doc_count,
         "avg_doc_len": avgdl,
@@ -344,14 +390,30 @@ def build_and_write_index(
 
 
 class PersistedIndex:
-    # Single-layer marker: the θ machinery's driver-side block METADATA
-    # covers the ENTIRE index, so WAND candidate generation can run on
-    # the driver (wand.pruned_scores) — a SegmentedIndex's metadata
-    # covers only the base layer (segment-layer passing blocks would be
-    # missed, an unsound candidate set), so it keeps the Spark pass.
-    _single_layer = True
+    """The index reader: a view over the base artifact plus the live
+    delta-segment layers named by `segments.json` (or by `manifest=`,
+    which delta._apply_delta passes for the view it is updating).
 
-    def __init__(self, spark: SparkSession, index_dir: str | Path):
+    With zero live layers the view is the base alone: doc_count and
+    avg_doc_len come from meta.json and opening runs no Spark job.
+    With live layers the statistics come from the manifest's exact
+    length sums, and every distributed query path merges layers at
+    read time (exact — equal to a full rebuild of the current corpus,
+    pinned by test_delta.py): segment blocks are unioned into the
+    block frame, per-block df is overridden by the merged df, and
+    tombstoned postings die at decode time. The driver-only paths
+    (search_local, warm) read base blocks alone and refuse a layered
+    view."""
+
+    # Above this tombstone volume the driver stops materializing the
+    # tombstone map locally (θ walks fall back to unpruned, reads use
+    # the join path) — ~80 MB of int64 pairs; compaction's
+    # tombstone_ratio budget keeps real indexes far below it.
+    TOMB_DRIVER_MAX = 5_000_000
+
+    def __init__(
+        self, spark: SparkSession, index_dir: str | Path, *, manifest: dict | None = None
+    ):
         self.spark = spark
         self.dir = Path(index_dir)
         meta = json.loads((self.dir / "meta.json").read_text())
@@ -359,16 +421,53 @@ class PersistedIndex:
             raise ValueError(
                 f"index format {meta['format_version']} != engine {FORMAT_VERSION}"
             )
-        self.doc_count: int = meta["doc_count"]
-        self.avg_doc_len: float = meta["avg_doc_len"]
+        if manifest is None and _manifest_path(self.dir).exists():
+            manifest = json.loads(_manifest_path(self.dir).read_text())
+        segs = manifest["segments"] if manifest else []
+        self.seg_ids: list[int] = [int(s["seg"]) for s in segs]
+        self._tomb_total = sum(s["n_removed"] for s in segs)
+        if segs:
+            # Read-side FORMAT GUARD (round-5 ADVICE, medium): the
+            # round-5 layout moved segments to block-encoded sibling
+            # hive trees (segments/postings/seg=N). A pre-existing
+            # row-format segment (old segments/seg=N/postings) would
+            # make _seg_read return None and this view silently serve
+            # base-only rows while the manifest-derived doc_count/
+            # avg_doc_len still include segment stats — silently wrong
+            # results. Fail loudly instead and name the migration
+            # (compact_segments folds layers into the base).
+            bad = [s["seg"] for s in segs if s.get("format") != "blocks"]
+            legacy = sorted(
+                p.name for p in (self.dir / "segments").glob("seg=*")
+            ) if (self.dir / "segments").exists() else []
+            if bad or legacy or not (self.dir / "segments" / "postings").exists():
+                raise ValueError(
+                    f"segment layout mismatch in {self.dir}: "
+                    f"non-block segments {bad or legacy} "
+                    "(pre-round-5 row format). Run compact_segments() "
+                    "with the engine version that WROTE them to fold "
+                    "segments into the base, then re-apply updates."
+                )
+            self.doc_count: int = live_doc_count(manifest)
+            len_sum = manifest["base_len_sum"] + sum(
+                s["len_new"] - s["len_removed"] for s in segs
+            )
+            self.avg_doc_len: float = (
+                (len_sum / self.doc_count) if self.doc_count else 0.0
+            )
+        else:
+            self.doc_count = meta["doc_count"]
+            self.avg_doc_len = meta["avg_doc_len"]
         self.term_buckets: int = meta["term_buckets"]
         self.block_size: int = meta.get("block_size", POSTING_BLOCK_SIZE)
-        # Stored block_ub / max_kernel were computed at encode time with
-        # `ub_avg_doc_len` (incremental merges keep the original basis,
-        # merge.py). Kernels grow with avgdl and k(a2)/k(a1) ≤ a2/a1, so
-        # inflating stored bounds by avgdl_now / basis keeps every
-        # pruning bound a true upper bound under drift.
-        basis = float(meta.get("ub_avg_doc_len", self.avg_doc_len) or 0.0)
+        # Stored block_ub / max_kernel (base AND segments — _apply_delta
+        # encodes segments with the base's ub basis) were computed at
+        # encode time with `ub_avg_doc_len` (incremental merges keep the
+        # original basis, merge.py). Kernels grow with avgdl and
+        # k(a2)/k(a1) ≤ a2/a1, so inflating stored bounds by
+        # avgdl_now / basis keeps every pruning bound a true upper bound
+        # under drift — avgdl_now being the MERGED view's.
+        basis = float(meta.get("ub_avg_doc_len", meta["avg_doc_len"]) or 0.0)
         self.ub_factor: float = (
             max(1.0, self.avg_doc_len / basis) if basis > 0 else 1.0
         )
@@ -378,7 +477,7 @@ class PersistedIndex:
         # parquet read entirely. Entries: term -> (block rows, df);
         # absent terms cache as ([], 0) so misses are also one-shot.
         # Bounded; invalidated by constructing a fresh PersistedIndex
-        # (incremental merges rewrite files — reopen after updates,
+        # (updates rewrite files or add layers — reopen after updates,
         # like the reference reopens its SQLite cache).
         self._term_cache: "dict[str, tuple[list, int]]" = {}
         self.term_cache_max = 4096
@@ -399,16 +498,178 @@ class PersistedIndex:
 
     # --- plumbing ---------------------------------------------------------
 
+    def _require_base_only(self, what: str) -> None:
+        """The driver-only paths read base blocks alone — on a layered
+        view they would serve a mix of stale base postings and merged
+        statistics, so they refuse instead."""
+        if self.seg_ids:
+            raise ValueError(
+                f"{what} reads base blocks only, but {self.dir} has "
+                f"{len(self.seg_ids)} live segment layer(s); run "
+                "compact_segments() to fold them into the base first"
+            )
+
     def _matched_blocks(self, terms: list[str]) -> DataFrame:
         """Block rows for the query terms — bucket partition pruning +
-        row-group term stats do the seeking. `_layer` = 0 marks the
-        base layer: the pruning machinery (wand.py) is shared with
-        SegmentedIndex, whose block frame unions segment layers in, so
-        (term, _layer, block_id) is the cross-index block key."""
+        row-group term stats do the seeking. `_layer` marks the layer
+        (0 = base, N = segment N), so (term, _layer, block_id) is the
+        cross-layer block key of the pruning machinery (wand.py).
+
+        With live layers: ONE bucket-pruned base scan ∪ ONE hive-pruned
+        segment scan, restricted to terms whose merged df is positive,
+        with `df` OVERRIDDEN by the exact merged document frequency
+        (segment rows carry segment-local df, base rows pre-update df —
+        both wrong for scoring the merged view)."""
+        if self.seg_ids:
+            df_map = self.term_df_map(terms)
+            terms = [t for t in terms if t in df_map]
         buckets = sorted(set(term_buckets_for(self.spark, terms, self.term_buckets).values()))
-        return self.postings.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-        ).withColumn("_layer", F.lit(0))
+        in_terms = F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+        base = self.postings.filter(in_terms).withColumn("_layer", F.lit(0))
+        if not self.seg_ids:
+            return base
+        cols = ["term", "df", "block_id", "n", "block_first", "block_last",
+                "block_ub", "blob", "_layer"]
+        # every row's term passed the isin(terms) filter, so the map
+        # lookup can't miss (element_at on maps throws under ANSI only
+        # for absent keys).
+        mdf = F.element_at(
+            F.create_map(*[
+                lit for t in terms for lit in (F.lit(t), F.lit(int(df_map[t])))
+            ]),
+            F.col("term"),
+        ).cast("long") if terms else F.lit(0).cast("long")
+        out = base.withColumn("df", mdf).select(*cols)
+        segs = self._seg_read("postings")
+        if segs is None:
+            return out
+        return out.unionByName(
+            segs.filter(in_terms)
+            .withColumn("_layer", F.col("seg").cast("int"))
+            .withColumn("df", mdf)
+            .select(*cols)
+        )
+
+    def _seg_root(self, sub: str) -> Path:
+        return self.dir / "segments" / sub
+
+    def _seg_read(self, sub: str) -> DataFrame | None:
+        """One hive-partitioned read over segments/<sub>/seg=N/... —
+        the `seg` partition column identifies the layer; filters on it
+        prune directories. None when no live segments / no data.
+        The DataFrame (and with it Spark's file-index listing — ~3k
+        files at 8 segments × 64 buckets) is cached per index instance:
+        listing is paid once at first use, not per query."""
+        cache = getattr(self, "_seg_frames", None)
+        if cache is None:
+            cache = self._seg_frames = {}
+        if sub in cache:
+            return cache[sub]
+        root = self._seg_root(sub)
+        if not self.seg_ids or not root.exists():
+            cache[sub] = None
+            return None
+        cache[sub] = (
+            self.spark.read.option("basePath", str(root))
+            .parquet(str(root))
+            .filter(F.col("seg").isin(self.seg_ids))
+        )
+        return cache[sub]
+
+    def _tombstone_max(self) -> DataFrame | None:
+        """(doc_id, _tmax) — the HIGHEST layer that tombstoned each
+        doc_id, from one scan of the tombstone tree. A row written at
+        layer L survives iff _tmax is null or _tmax ≤ L (a layer's own
+        re-add outlives its own tombstone; later tombstones kill all
+        lower layers). One join replaces the per-layer anti-joins —
+        plan size stays O(1) in segment count."""
+        if getattr(self, "_tomb_max", "absent") != "absent":
+            return self._tomb_max
+        tombs = self._seg_read("tombstones")
+        if tombs is None:
+            self._tomb_max = None
+            return None
+        out = tombs.groupBy("doc_id").agg(F.max("seg").alias("_tmax"))
+        # manifest knows the exact tombstone volume — broadcast the
+        # aggregated map when it is small (the common steady state), so
+        # the layered read costs a map-side hash join instead of
+        # shuffling the decoded posting rows.
+        if self._tomb_total <= 2_000_000:
+            out = F.broadcast(out)
+        self._tomb_max = out
+        return out
+
+    def _tombstone_arrays(self):
+        """(sorted doc_ids int64, tmax int64) — the tombstone map as
+        driver numpy arrays (one pyarrow read, cached per instance), or
+        None when there are no tombstones or the volume exceeds
+        TOMB_DRIVER_MAX. Feeds BOTH the θ walk's exclusion set and the
+        decode-time filter broadcast (codec.explode_blocks_rows)."""
+        if getattr(self, "_tomb_np", "absent") != "absent":
+            return self._tomb_np
+        import numpy as np
+        import pyarrow.dataset as pads
+
+        self._tomb_np = None
+        if (
+            not self.seg_ids or self._tomb_total == 0
+            or self._tomb_total > self.TOMB_DRIVER_MAX
+            or not self._seg_root("tombstones").exists()
+        ):
+            return None
+        tbl = self._dataset("segments/tombstones").to_table(
+            columns=["doc_id", "seg"], filter=pads.field("seg").isin(self.seg_ids),
+        )
+        ids = tbl.column("doc_id").to_numpy().astype(np.int64, copy=True)
+        segs = tbl.column("seg").to_numpy().astype(np.int64, copy=True)
+        if len(ids) == 0:
+            return None
+        order = np.lexsort((segs, ids))  # by doc_id, then seg asc
+        ids_s, segs_s = ids[order], segs[order]
+        uniq, starts = np.unique(ids_s, return_index=True)
+        ends = np.r_[starts[1:], len(ids_s)] - 1
+        self._tomb_np = (uniq, segs_s[ends])  # max seg per id
+        return self._tomb_np
+
+    def _tombstone_bc(self):
+        """Spark broadcast of _tombstone_arrays (cached), or None."""
+        if getattr(self, "_tomb_bcast", "absent") != "absent":
+            return self._tomb_bcast
+        arrays = self._tombstone_arrays()
+        self._tomb_bcast = (
+            self.spark.sparkContext.broadcast(arrays) if arrays is not None else None
+        )
+        return self._tomb_bcast
+
+    def docs_view(self) -> DataFrame:
+        """Current doc table: per doc_id the row from the HIGHEST layer,
+        dropped when a later layer tombstoned it (the base table as is
+        when no layer is live)."""
+        from pyspark.sql import Window
+
+        base = self.docs.select(*DOC_COLS)
+        if not self.seg_ids:
+            return base
+        allrows = base.withColumn("_layer", F.lit(0))
+        seg_docs = self._seg_read("docs")
+        if seg_docs is not None:
+            allrows = allrows.unionByName(
+                seg_docs.select(*DOC_COLS, F.col("seg").cast("int").alias("_layer"))
+            )
+        w = Window.partitionBy("doc_id").orderBy(F.desc("_layer"))
+        winner = (
+            allrows.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        tomb_max = self._tombstone_max()
+        if tomb_max is None:
+            return winner.drop("_layer")
+        return (
+            winner.join(tomb_max, "doc_id", "left")
+            .filter(F.col("_tmax").isNull() | (F.col("_tmax") <= F.col("_layer")))
+            .drop("_layer", "_tmax")
+        )
 
     def _term_blocks_for_theta(self, t_star: str):
         """(block METADATA rows of t_star, excluded-doc-id array or
@@ -418,11 +679,23 @@ class PersistedIndex:
         a head term carries thousands of blocks whose encoded payloads
         dominated the old eager read (round-6 verdict #2: the probe
         cost the head class +13% at 2M for zero wins). Blobs are
-        fetched per block via _theta_blobs. The base index has no
-        tombstones, so nothing is excluded."""
+        fetched per block via _theta_blobs.
+
+        Rows are BASE blocks only. With live layers the tombstoned docs
+        are excluded: their base postings are dead, and counting one
+        would break θ's lower-bound property; segment postings are
+        ignored, which only weakens θ (sound). Returns ([], None) when
+        the tombstone map exceeds the driver budget — wand then falls
+        back to unpruned scoring."""
+        exclude = None
+        if self.seg_ids:
+            if self._tomb_total > self.TOMB_DRIVER_MAX:
+                return [], None
+            arrays = self._tombstone_arrays()
+            exclude = arrays[0] if arrays is not None else None
         if t_star in self._term_cache:
             blocks, _df = self._term_cache[t_star]
-            return [b[:5] for b in blocks], None
+            return [b[:5] for b in blocks], exclude
         meta = self._term_meta_cache.get(t_star)
         if meta is None:
             tbl = self._arrow_read(
@@ -442,7 +715,7 @@ class PersistedIndex:
             self._term_meta_cache[t_star] = meta
             while len(self._term_meta_cache) > self.term_cache_max:
                 self._term_meta_cache.pop(next(iter(self._term_meta_cache)))
-        return meta, None
+        return meta, exclude
 
     def prefetch_theta_meta(self, terms: list[str]) -> None:
         """Fill the metadata cache for MANY terms in ONE pyarrow read —
@@ -548,16 +821,17 @@ class PersistedIndex:
         return cache[subdir]
 
     def _arrow_read(self, subdir: str, terms: list[str], columns: list[str]):
+        """Rows of `terms` under subdir, term_bucket/term pruned; a
+        segments/ tree is also pruned to the live layers."""
         import pyarrow.dataset as pads
 
         buckets = sorted(set(term_buckets_for(self.spark, terms, self.term_buckets).values()))
-        return self._dataset(subdir).to_table(
-            columns=columns,
-            filter=pads.field("term_bucket").isin(buckets) & pads.field("term").isin(terms),
-        )
+        flt = pads.field("term_bucket").isin(buckets) & pads.field("term").isin(terms)
+        if subdir.startswith("segments/"):
+            flt = flt & pads.field("seg").isin(self.seg_ids)
+        return self._dataset(subdir).to_table(columns=columns, filter=flt)
 
-    def term_dict(self, terms: list[str]) -> dict[str, tuple[int, float]]:
-        """{term: (df, max_kernel)} via pyarrow (tiny read, no Spark job)."""
+    def _base_dict(self, terms: list[str]) -> dict[str, tuple[int, float]]:
         tbl = self._arrow_read("dict", terms, ["term", "df", "max_kernel"])
         return {
             t: (int(d), float(mk))
@@ -568,13 +842,76 @@ class PersistedIndex:
             )
         }
 
+    def term_df_map(self, terms: list[str]) -> dict[str, int]:
+        """Exact df per query term over the view: base dict df + Σ seg
+        (df_new − df_removed) — one pyarrow partition-pruned read over
+        the dfdelta tree (sums are order-independent across layers).
+        Terms whose merged df is 0 are absent. Memoized per term set:
+        one query touches this up to three times (term_dict,
+        _matched_blocks, search_distributed_multi)."""
+        key = tuple(sorted(terms))
+        memo = getattr(self, "_dfmap_memo", None)
+        if memo is None:
+            memo = self._dfmap_memo = {}
+        if key in memo:
+            return dict(memo[key])
+        out = {t: d for t, (d, _mk) in self._base_dict(terms).items()}
+        if self.seg_ids and self._seg_root("dfdelta").exists():
+            tbl = self._arrow_read(
+                "segments/dfdelta", terms, ["term", "df_new", "df_removed"]
+            )
+            for t, dn, dr in zip(
+                tbl.column("term").to_pylist(),
+                tbl.column("df_new").to_pylist(),
+                tbl.column("df_removed").to_pylist(),
+            ):
+                out[t] = out.get(t, 0) + int(dn) - int(dr)
+        result = {t: d for t, d in out.items() if d > 0}
+        if len(memo) > 256:
+            memo.clear()
+        memo[key] = dict(result)
+        return result
+
+    def _seg_max_kernels(self, terms: list[str]) -> dict[str, float]:
+        """{term: max block_ub across live segment layers} — pyarrow
+        metadata-only read (no blobs) over the segment postings tree,
+        seg/term_bucket/term pruned. Needed so query-time upper bounds
+        cover segment postings too: a term's merged ub must dominate
+        contributions from EVERY live layer, not just the base dict."""
+        if not self.seg_ids or not self._seg_root("postings").exists():
+            return {}
+        tbl = self._arrow_read("segments/postings", terms, ["term", "block_ub"])
+        out: dict[str, float] = {}
+        for t, ub in zip(
+            tbl.column("term").to_pylist(), tbl.column("block_ub").to_pylist()
+        ):
+            if ub is not None and float(ub) > out.get(t, 0.0):
+                out[t] = float(ub)
+        return out
+
+    def term_dict(self, terms: list[str]) -> dict[str, tuple[int, float]]:
+        """{term: (df, max_kernel)} via pyarrow (tiny reads, no Spark
+        job) — the wand.py pruning contract. With live layers, df is
+        the merged df (term_df_map) and max_kernel the max over every
+        live layer's blocks."""
+        base = self._base_dict(terms)
+        if not self.seg_ids:
+            return base
+        seg_mk = self._seg_max_kernels(terms)
+        return {
+            t: (d, max(base[t][1] if t in base else 0.0, seg_mk.get(t, 0.0)))
+            for t, d in self.term_df_map(terms).items()
+        }
+
     def warm(self, top_df_terms: int = 256) -> int:
         """Pre-decode the highest-df terms' contribution vectors — the
         cache warmup a long-lived serving process runs at open. High-df
         terms dominate cold-query tail latency (their lists are the
         biggest decodes); rare terms stay cheap cold. Stops early when
         the contribution cache budget is half-spent so warmed entries
-        don't evict each other. Returns the number of terms warmed."""
+        don't evict each other. Returns the number of terms warmed.
+        Base-only: raises ValueError on a view with live layers."""
+        self._require_base_only("warm")
         tbl = self._dataset("dict").to_table(columns=["term", "df"])
         pairs = sorted(
             zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()),
@@ -613,7 +950,11 @@ class PersistedIndex:
         docs are never dropped); prune=False decodes every matched
         list (the reference's own flow, vexor/cache.py:1492-1535 →
         bm25.score_postings) — kept for equivalence testing.
+
+        Base-only: raises ValueError on a view with live layers (use
+        search_distributed, or compact_segments first).
         """
+        self._require_base_only("search_local")
         terms = prepare_query_terms(query)
         if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
             return []
@@ -820,21 +1161,36 @@ class PersistedIndex:
         return uniq, acc[uniq]
 
     def _exploded_rows(self, blocks: DataFrame) -> DataFrame:
-        """blocks → (term, df, doc_id, tf, doc_len) posting rows — the
-        decode step shared by single-query scoring and the batch path
-        (SegmentedIndex overrides this with its tombstone-filtered
-        decode; wand.pruned_multi scores whatever frame it returns).
-        One fused mapInPandas kernel: vectorized varint decode +
-        np.repeat replication (codec.explode_blocks_rows) — no
-        per-posting Python structs, no JVM explode."""
+        """blocks → live (term, df, doc_id, tf, doc_len) posting rows —
+        the decode step shared by single-query scoring and the batch
+        path (wand.pruned_multi scores whatever frame it returns). One
+        fused mapInPandas kernel: vectorized varint decode + np.repeat
+        replication (codec.explode_blocks_rows) — no per-posting Python
+        structs, no JVM explode. With live layers the tombstone filter
+        is applied AT DECODE TIME via the broadcast map, so dead
+        postings die inside the numpy batch with no join stage; only a
+        tombstone volume above the driver budget falls back to the
+        broadcast max-layer join."""
         from vexor_spark.functions.codec import explode_blocks_rows
 
-        return explode_blocks_rows(blocks)
+        bc = self._tombstone_bc()
+        if bc is not None:
+            return explode_blocks_rows(blocks, tomb_bc=bc)
+        tomb_max = self._tombstone_max()
+        if tomb_max is None:
+            return explode_blocks_rows(blocks)
+        return (
+            explode_blocks_rows(blocks, keep_layer=True)
+            .join(tomb_max, "doc_id", "left")
+            .filter(F.col("_tmax").isNull() | (F.col("_tmax") <= F.col("_layer")))
+            .drop("_tmax", "_layer")
+        )
 
     def _score_blocks(
         self, blocks: DataFrame, candidates: DataFrame | None = None
     ) -> DataFrame:
-        """blocks (term, df, blob, ...) → (doc_id, score). `candidates`
+        """blocks (term, df, blob, ...) → live (doc_id, score) — the
+        fallback/rescore hook wand.pruned_scores calls. `candidates`
         (doc_id), when given, restricts the aggregation to those docs
         via a broadcast semi-join BEFORE the shuffle (the pruned
         rescore, wand.py step 3)."""
@@ -868,7 +1224,10 @@ class PersistedIndex:
         the unpruned price and head-term queries skip decoding most
         blocks. `metrics` (with prune) collects the pruning counters —
         opt-in, costs extra count() actions (wand.pruned_scores
-        docstring)."""
+        docstring). Over live layers, pruning runs over ALL layers with
+        a tombstone-aware θ (round-5 verdict item 1: under the
+        cadence-4 compaction default the production index almost always
+        has live segments, so the steady-state path must prune too)."""
         terms = prepare_query_terms(query)
         spark = self.spark
         if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
@@ -914,21 +1273,27 @@ class PersistedIndex:
         guaranteed fallback when no query is prunable — so head-term
         queries in the batch stop forcing full decodes of their lists.
 
+        Over live layers this is the steady-state serving path under
+        continuous updates: segment blocks union into the shared scan,
+        df is the merged df, and tombstones filter at decode time.
+
         Rank-identical to per-query search_distributed by construction:
         same blocks, same contributions, same (score desc, doc_id asc)
-        order (pinned in test_storage.py)."""
+        order (pinned in test_storage.py and test_delta.py)."""
         from pyspark.sql import Window
 
         spark = self.spark
+        empty_schema = "query string, rank long, doc_id long, score double"
         qterms = {name: prepare_query_terms(q) for name, q in queries.items()}
         terms_all = sorted({t for ts in qterms.values() for t in ts})
         if not terms_all or self.doc_count <= 0 or self.avg_doc_len <= 0:
-            return local_frame(
-                spark, [], "query string, rank long, doc_id long, score double"
-            )
+            return local_frame(spark, [], empty_schema)
+        df_map = self.term_df_map(terms_all)
+        if not df_map:
+            return local_frame(spark, [], empty_schema)
         qdf = local_frame(
             spark,
-            [(n, t) for n, ts in qterms.items() for t in ts],
+            [(n, t) for n, ts in qterms.items() for t in ts if t in df_map],
             "query string, term string",
         )
         exploded = None
@@ -961,8 +1326,9 @@ class PersistedIndex:
         )
 
     def decorate(self, ranked: DataFrame) -> DataFrame:
-        """Attach chunk metadata (broadcast join, reference J6)."""
-        meta = self.docs.select(
+        """Attach chunk metadata (broadcast join, reference J6) from
+        the current doc table, segment-layer docs included."""
+        meta = self.docs_view().select(
             "doc_id", "url", "chunk_index", "preview", "start_line", "end_line"
         )
         return (

@@ -102,9 +102,9 @@ def _theta_driver(pidx, t_star: str, df_star: int, k: int) -> float:
     (same lifecycle as the term cache: a reopen after updates starts
     fresh) — repeated queries sharing a t* skip the walk entirely.
 
-    A SegmentedIndex walks its BASE blocks but must drop tombstoned
-    docs — a θ that counted a dead doc's contribution would not
-    lower-bound the live k-th best score (the round-5 verdict's
+    A view with live segment layers walks its BASE blocks but must
+    drop tombstoned docs — a θ that counted a dead doc's contribution
+    would not lower-bound the live k-th best score (the round-5 verdict's
     soundness point). Excluding docs only weakens θ, so the walk stays
     exact-or-conservative; segment-layer postings are ignored for the
     same reason (sound: θ is a lower bound, not a max)."""
@@ -414,7 +414,7 @@ def _passing_volume(pidx, present, idf_map, rest_ub, theta, f):
     merge' at 2M: 49.8 s vs 6.2 s unpruned). Candidates are distinct
     docs of passing blocks, so candidates ≤ this volume: engaging only
     when volume ≤ MAX_CANDIDATES makes the cap unreachable from the
-    base layer. For a SegmentedIndex the walk excludes segment-layer
+    base layer. On a layered view the walk excludes segment-layer
     blocks — an undercount only in proportion to segment size, and the
     Spark-side cap still guards exactness-by-fallback."""
     import numpy as np
@@ -816,19 +816,19 @@ def pruned_scores(
         + F.col("rest_ub")
         >= F.lit(theta),
     )
-    # Candidate generation (round-7): on a SINGLE-layer index the
+    # Candidate generation (round-7): on a zero-layer view the
     # driver already holds every term's block metadata, and engagement
     # required the passing-block posting volume ≤ MAX_CANDIDATES — so
     # the passing blobs are a small bounded read and candidates can be
     # computed driver-side with ZERO Spark jobs (the Spark candidate
     # pass cost a persist + a decode job + a distinct+collect, which
     # at 2M outweighed the decode it saved — the engaged-head residual
-    # of the round-6 verdict item 2). Layered indexes keep the Spark
-    # pass: their driver metadata covers only the base layer, and a
-    # candidate set missing segment-layer passing blocks would be
-    # unsound.
+    # of the round-6 verdict item 2). Views with live segment layers
+    # keep the Spark pass: their driver metadata covers only the base
+    # layer, and a candidate set missing segment-layer passing blocks
+    # would be unsound.
     candidates = None
-    if getattr(pidx, "_single_layer", False):
+    if not pidx.seg_ids:
         candidates = _candidates_driver(
             pidx, present, idf_map, rest_ub, theta, float(pidx.ub_factor), metrics
         )
@@ -882,8 +882,8 @@ def _candidates_driver(
 ):
     """Sorted candidate doc_ids computed ON THE DRIVER from the block
     metadata + a bounded batched blob read of the passing blocks —
-    sound only on single-layer indexes (the metadata covers the whole
-    index). Engagement already proved Σ n over passing blocks ≤
+    sound only on zero-layer views (the metadata covers the whole
+    view). Engagement already proved Σ n over passing blocks ≤
     MAX_CANDIDATES, so candidates can never overflow the cap. Returns
     None if a blob is unexpectedly missing (caller falls back to the
     Spark candidate pass)."""
@@ -927,7 +927,7 @@ def _needed_keys_driver(
     """[(term, block_id)] of the blocks the exact rescore must decode:
     passing blocks ∪ blocks whose doc-id range contains a candidate —
     computed from the driver block metadata (sorted-candidate
-    searchsorted containment), single-layer indexes only."""
+    searchsorted containment), zero-layer views only."""
     import numpy as np
 
     cands = np.asarray(sorted(candidates), dtype=np.int64)
