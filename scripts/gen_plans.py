@@ -78,12 +78,12 @@ out.append(("hashed-BoW tf-idf dense scores (explode buckets -> two-phase counts
 # df map; exact BM25 over the layered view.
 import shutil, tempfile
 from vexor_spark.index.delta import delta_update
-from vexor_spark.index.merge import update_persisted_index
+from vexor_spark.index.maintenance import update_index
 from vexor_spark.sources.corpus import PAGES_SCHEMA, generate_pages_df, page_record
 dwork = tempfile.mkdtemp(prefix="plans_delta_w")
 didx = tempfile.mkdtemp(prefix="plans_delta_i") + "/idx"
 pages0 = generate_pages_df(spark, 400, edges=False, partitions=4)
-update_persisted_index(pages0, dwork, didx, term_buckets=8)
+update_index(pages0, dwork, didx, term_buckets=8)
 mut = pages0.withColumn(
     "text", F.when(F.col("url").endswith("0007.html") | (F.xxhash64("url") % 20 == 0),
                    F.concat(F.col("text"), F.lit(" plansedit"))).otherwise(F.col("text"))

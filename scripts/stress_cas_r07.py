@@ -138,13 +138,13 @@ def main() -> None:
     (shared / "state.json").write_text("{}")
     idx = shared / "idx"
 
-    from vexor_spark.index.merge import update_persisted_index
+    from vexor_spark.index.maintenance import update_index
     from vexor_spark.session import get_spark
     from vexor_spark.sources.corpus import PAGES_SCHEMA
 
     spark = get_spark("local[8]", shuffle_partitions=8, app_name="cas_parent")
     base_work = shared / "work_base"
-    update_persisted_index(
+    update_index(
         spark.createDataFrame(_corpus({}), PAGES_SCHEMA), base_work, idx,
         term_buckets=8,
     )

@@ -16,7 +16,7 @@ from vexor_spark.index.delta import (
     delta_update,
     load_manifest,
 )
-from vexor_spark.index.merge import update_persisted_index
+from vexor_spark.index.maintenance import update_index
 from vexor_spark.index.storage import PersistedIndex, build_and_write_index
 from vexor_spark.sources.corpus import PAGES_SCHEMA
 
@@ -79,7 +79,7 @@ QUERIES = [
 
 def test_delta_exactness_and_base_untouched(spark, tmp_path):
     work, idx, rebuild = tmp_path / "work", tmp_path / "idx", tmp_path / "rb"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     base_state = _base_file_state(idx)
 
     # delta 1: content change (3), page removed (7), brand-new page
@@ -152,7 +152,7 @@ def test_delta_exactness_and_base_untouched(spark, tmp_path):
 
 def test_delta_noop_and_fresh_index(spark, tmp_path):
     work, idx = tmp_path / "w2", tmp_path / "i2"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     s = delta_update(_df(spark, _corpus()), work, idx)
     assert s["action"] == "noop"
     # a segmented view with zero segments equals the base exactly
@@ -170,7 +170,7 @@ def test_driver_paths_refuse_layers_and_decorate_sees_segment_docs(spark, tmp_pa
     import pytest
 
     work, idx = tmp_path / "w_drv", tmp_path / "i_drv"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     extra = [(1, "brandnew page content with common words")]
     delta_update(_df(spark, _corpus(extra=extra)), work, idx)
     view = PersistedIndex(spark, idx)
@@ -198,7 +198,7 @@ def test_rebuild_in_place_drops_stale_layers(spark, tmp_path):
     from vexor_spark.index.storage import write_index
 
     work, idx, fresh = tmp_path / "w_rb", tmp_path / "i_rb", tmp_path / "fresh"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     delta_update(
         _df(spark, _corpus(mutations={3: "freshly minted tokens"})), work, idx
     )
@@ -235,6 +235,30 @@ def test_rebuild_in_place_drops_stale_layers(spark, tmp_path):
         assert _ranked(got, q, 10, False) == _ranked(want, q, 10, False), q
 
 
+def test_compaction_keeps_block_size(spark, tmp_path):
+    """compact_segments rewrites the base with the index's own block
+    size from meta.json, not the codec default."""
+    import json
+
+    work, idx, fresh = tmp_path / "w_bs", tmp_path / "i_bs", tmp_path / "f_bs"
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8, block_size=16)
+    cur = _corpus(mutations={3: "freshly minted tokens common words"}, drop={9})
+    delta_update(_df(spark, cur), work, idx)
+    compact_segments(spark, work, idx)
+
+    assert json.loads((idx / "meta.json").read_text())["block_size"] == 16
+    blocks = spark.read.parquet(str(idx / "postings"))
+    assert blocks.agg(F.max("n")).collect()[0][0] <= 16
+    assert blocks.filter(F.col("term") == "common").count() > 1
+
+    build_and_write_index(_df(spark, cur), fresh, term_buckets=8, block_size=16)
+    got, want = PersistedIndex(spark, idx), PersistedIndex(spark, fresh)
+    assert got.block_size == 16 and not got.seg_ids
+    for q in ("common", "freshly minted", "alpha4 words", "alpha9"):
+        assert _ranked(got, q, 10, True) == _ranked(want, q, 10, True), q
+        assert _ranked(got, q, 10, False) == _ranked(want, q, 10, False), q
+
+
 def test_delta_crash_window_resume(spark, tmp_path):
     """ADVICE r4: stage 1 commits lineage before the segment/manifest
     exist. Simulate a crash in that window (stage 1 ran, stage 2
@@ -244,7 +268,7 @@ def test_delta_crash_window_resume(spark, tmp_path):
     from vexor_spark.index.delta import _pending_path
 
     work, idx = tmp_path / "w3", tmp_path / "i3"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
 
     cur = dict(mutations={3: "freshly minted tokens replacing the old body"})
     # "crash": stage 1 runs (lineage committed, chunk store current),
@@ -291,7 +315,7 @@ def test_segmented_multi_query_rank_identity(spark, tmp_path):
     job over the layered view, rank-identical to per-query
     search_distributed with 2 live segments."""
     work, idx = tmp_path / "w4", tmp_path / "i4"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     cur = dict(mutations={3: "freshly minted tokens replacing the old body"})
     delta_update(_df(spark, _corpus(**cur)), work, idx)
     cur2 = dict(
@@ -328,7 +352,7 @@ def test_legacy_segment_layout_raises(spark, tmp_path):
     import pytest
 
     work, idx = tmp_path / "work", tmp_path / "idx"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     delta_update(
         _df(spark, _corpus(mutations={3: "fresh body tokens"})), work, idx
     )
@@ -365,7 +389,7 @@ def test_stage1_discards_applied_marker(spark, tmp_path):
     from vexor_spark.index.checkpoint import build_chunks_resumable
 
     work, idx = tmp_path / "work", tmp_path / "idx"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     delta_update(
         _df(spark, _corpus(mutations={3: "fresh body tokens"})), work, idx
     )  # seg 1 committed; marker cleaned
@@ -427,7 +451,7 @@ def test_segmented_pruned_engages_and_is_exact(spark, tmp_path):
     the boosted kernel and silently drop the plain docs — the
     tombstone-aware walk must lower θ and stay exact."""
     work, idx = tmp_path / "work", tmp_path / "idx"
-    update_persisted_index(_df(spark, _skew_corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _skew_corpus()), work, idx, term_buckets=8)
 
     # --- zero layers: the driver already holds every block's metadata,
     # so the candidate set is computed on the driver
@@ -454,8 +478,9 @@ def test_segmented_pruned_engages_and_is_exact(spark, tmp_path):
     assert "candidates_driver" not in m, m
     # the bound test must actually fail blocks; at this toy scale the
     # candidate doc-id ranges can still span every block (the exactness
-    # rescue re-decodes them), so decode reduction is asserted at bench
-    # scale (scripts/bench_scale_r07.py), block FAILURE here.
+    # rescue re-decodes them), so decode reduction is measured at bench
+    # scale (BENCH_R07_SCALE.json segmented_pruned_2M_4segs_r07: median
+    # 93 of 12,121 blocks decoded), block FAILURE here.
     assert m["blocks_passing"] < m["blocks_total"], m
     assert m["blocks_decoded"] <= m["blocks_total"], m
 
@@ -481,7 +506,7 @@ def test_segmented_decode_live_equals_join_path(spark, tmp_path):
     returns exactly the rows the broadcast max-layer JOIN path returns
     — same live postings, same scores."""
     work, idx = tmp_path / "work", tmp_path / "idx"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     delta_update(
         _df(spark, _corpus(mutations={3: "fresh minted tokens"}, drop={7})),
         work, idx,
@@ -503,7 +528,7 @@ def test_segmented_multi_uses_decode_live_and_stays_identical(spark, tmp_path):
     """Batch serving over the layered view after the decode-live
     rewrite: still rank-identical to per-query search_distributed."""
     work, idx = tmp_path / "work", tmp_path / "idx"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     delta_update(
         _df(spark, _corpus(mutations={4: "freshly minted tokens"})), work, idx
     )
@@ -536,7 +561,7 @@ def test_manifest_cas_two_committers(spark, tmp_path):
     )
 
     work, idx = tmp_path / "work", tmp_path / "idx"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
 
     m_b = load_manifest(spark, idx)  # committer B snapshots generation 0
     s1 = delta_update(  # committer A wins generation 0 -> 1
@@ -587,7 +612,7 @@ def test_concurrent_delta_race_one_winner(spark, tmp_path):
     )
 
     work, idx, rb = tmp_path / "work", tmp_path / "idx", tmp_path / "rb"
-    update_persisted_index(_df(spark, _corpus()), work, idx, term_buckets=8)
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
     cur = dict(mutations={3: "race body tokens entirely new"})
     stage1 = build_chunks_resumable(
         _df(spark, _corpus(**cur)), work, pending_file=idx / "_pending_update.json"

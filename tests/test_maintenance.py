@@ -1,24 +1,16 @@
-"""Unified update_index (index/maintenance.py): shape-measured routing
-— concentrated→in-place, diffuse→delta, huge→full rebuild, ordering
-shift→delta — each route's result exact vs a from-scratch rebuild, and
-budget-triggered auto-compaction folding segments back into the base.
-
-Replaces the reference's single change-ratio gate
-(vexor/services/index_service.py:29, :263-344) with routing driven by
-the 2M-page measurements in BENCH_R04_SCALE.json (in-place = 1.32× a
-full rebuild under diffuse change; delta = 0.13×)."""
+"""Unified update_index (index/maintenance.py): the four-route table
+— no index→full build, no change→noop, change ratio > 0.5→full rebuild
+(the reference's gate, vexor/services/index_service.py:29), otherwise
+→delta — each route's result exact vs a from-scratch rebuild, removals
+and avg-doc-len drift through the layered view, and budget-triggered
+auto-compaction folding segments back into the base."""
 
 from __future__ import annotations
 
 import datetime as dt
-from pathlib import Path
 
 from vexor_spark.index.delta import SegmentedIndex, load_manifest
-from vexor_spark.index.maintenance import (
-    compaction_due,
-    measure_change_shape,
-    update_index,
-)
+from vexor_spark.index.maintenance import compaction_due, update_index
 from vexor_spark.index.storage import PersistedIndex, build_and_write_index
 from vexor_spark.sources.corpus import PAGES_SCHEMA
 
@@ -27,9 +19,6 @@ TERM_BUCKETS = 64
 
 
 def _page(i: int, body: str) -> dict:
-    # urls share their token set except the numeric id — so a page's
-    # term footprint is its BODY vocabulary plus {https, ex, org, p,
-    # <id>, html}: a tiny-vocab body edit stays concentrated.
     return {
         "url": f"https://ex.org/p/{i:04d}.html",
         "warc_ts": dt.datetime(2025, 1, 1) + dt.timedelta(seconds=i),
@@ -81,87 +70,62 @@ def _assert_view_exact(spark, tmp_path, idx, recs, queries, tag):
 
 
 def test_update_index_routes_by_shape(spark, tmp_path):
+    """full_build → noop → delta (a one-page edit, then a page removal,
+    over the live layer) → full_rebuild, each step rank-identical to a
+    from-scratch rebuild of the current corpus."""
     work, idx = tmp_path / "w", tmp_path / "i"
-    # shared-vocab corpus: a one-page edit's affected-term footprint is
-    # the bucket's url ids + the shared body + the edit — genuinely
-    # concentrated. (With per-page unique vocabularies even a one-page
-    # edit is diffuse, because the edit's input BUCKET drags its
-    # co-resident docs' vocabularies into the rewrite — the router
-    # measures that honestly; see the diffuse step below.)
-    bodies = lambda i: "shared tiny vocab body common words"  # noqa: E731
 
-    # 0) no index → full build
-    s0 = update_index(
-        _df(spark, _corpus(bodies=bodies)), work, idx, term_buckets=TERM_BUCKETS
+    s0 = update_index(_df(spark, _corpus()), work, idx, term_buckets=TERM_BUCKETS)
+    assert s0["route"] == "full_build" and s0["route_reason"] == "no_existing_index"
+
+    s_no = update_index(_df(spark, _corpus()), work, idx)
+    assert s_no["route"] == "noop" and s_no["route_reason"] == "no_change"
+    assert s_no["compaction"] is None
+
+    # tombstone_ratio=1.0 keeps the segments alive for inspection —
+    # test_auto_compaction_budget covers the budget itself.
+    cur = {3: "alpha3 edited body tricky common words"}
+    s1 = update_index(
+        _df(spark, _corpus(mutations=cur)), work, idx, tombstone_ratio=1.0
     )
-    assert s0["route"] == "full_build"
-
-    # noop
-    s_no = update_index(_df(spark, _corpus(bodies=bodies)), work, idx)
-    assert s_no["route"] == "noop" and s_no["compaction"] is None
-
-    # 1) CONCENTRATED: one page's body edit inside the shared tiny
-    # vocabulary — old ∪ new terms span ≪ 25% of 64 buckets → in-place.
-    cur = {3: "shared tiny vocab body common tricky"}
-    s1 = update_index(_df(spark, _corpus(mutations=cur, bodies=bodies)), work, idx)
-    assert s1["route"] == "inplace", s1
-    assert s1["shape"]["bucket_ratio"] <= 0.25
+    assert s1["route"] == "delta", s1
+    assert s1["route_reason"].startswith("change_ratio") and "<=" in s1["route_reason"]
+    assert len(load_manifest(spark, idx)["segments"]) == 1
     _assert_view_exact(
-        spark, tmp_path, idx, _corpus(mutations=cur, bodies=bodies),
-        ["common", "tricky", "shared vocab"], "inplace",
+        spark, tmp_path, idx, _corpus(mutations=cur),
+        ["common", "tricky", "alpha3 edited"], "edit",
     )
 
-    # 2) DIFFUSE: many pages change and their unique per-page
-    # vocabularies spray across most term buckets → delta segment.
-    cur2 = dict(cur)
-    for i in range(0, N_PAGES, 4):  # ~⅓ of input buckets: below the 0.5
-        cur2[i] = f"edited{i} fresh{i} body{i} new{i} common words"
-    # tombstone_ratio=1.0 keeps the segment alive for inspection —
-    # with the default 0.2 budget this very update would (correctly)
-    # auto-compact, which test_auto_compaction_budget covers.
     s2 = update_index(
-        _df(spark, _corpus(mutations=cur2, bodies=bodies)), work, idx,
+        _df(spark, _corpus(mutations=cur, drop={7})), work, idx,
         tombstone_ratio=1.0,
     )
     assert s2["route"] == "delta", s2
-    assert s2["route_reason"].startswith("diffuse")
-    assert s2["shape"]["bucket_ratio"] > 0.25
-    man = load_manifest(spark, idx)
-    assert len(man["segments"]) == 1
+    assert s2["route_reason"].startswith("change_ratio") and "<=" in s2["route_reason"]
+    assert len(load_manifest(spark, idx)["segments"]) == 2
     _assert_view_exact(
-        spark, tmp_path, idx, _corpus(mutations=cur2, bodies=bodies),
-        ["common", "edited4 fresh4", "tricky"], "delta",
+        spark, tmp_path, idx, _corpus(mutations=cur, drop={7}),
+        ["common", "tricky", "alpha7 beta7"], "removal",
     )
 
-    # 2b) live segments force delta even for a concentrated edit
-    cur3 = dict(cur2)
-    cur3[3] = "shared tiny vocab body common quirky"
-    s3 = update_index(
-        _df(spark, _corpus(mutations=cur3, bodies=bodies)), work, idx,
-        tombstone_ratio=1.0,
-    )
-    assert s3["route"] == "delta" and s3["route_reason"] == "live_segments"
-
-    # 3) HUGE: >50% of input buckets change → full rebuild, segments
-    # cleared.
+    # >50% of input buckets change → full rebuild, segments cleared.
     cur4 = {i: f"rewrite{i} everything{i} common words" for i in range(N_PAGES)}
-    s4 = update_index(_df(spark, _corpus(mutations=cur4, bodies=bodies)), work, idx)
+    s4 = update_index(_df(spark, _corpus(mutations=cur4)), work, idx)
     assert s4["route"] == "full_rebuild", s4
     assert not (idx / "segments").exists()
     assert not load_manifest(spark, idx)["segments"]
     _assert_view_exact(
-        spark, tmp_path, idx, _corpus(mutations=cur4, bodies=bodies),
-        ["common", "rewrite7 everything7", "quirky"], "rebuild",
+        spark, tmp_path, idx, _corpus(mutations=cur4),
+        ["common", "rewrite7 everything7", "tricky"], "rebuild",
     )
 
 
-def test_update_index_ordering_shift_routes_to_delta(spark, tmp_path):
-    """A new url sorting BEFORE survivors shifts every dense doc id —
-    in-place must refuse; the router lands on delta (which keeps
-    surviving ids and allocates fresh ones) instead of paying a full
-    rebuild."""
+def test_update_index_new_first_url_routes_to_delta(spark, tmp_path):
+    """A new url sorting BEFORE survivors would shift every dense doc id
+    of a rebuild; delta keeps surviving ids and allocates fresh ones,
+    so it routes like any other small change."""
     work, idx = tmp_path / "w2", tmp_path / "i2"
-    bodies = lambda i: "shared tiny vocab body"  # noqa: E731 — concentrated shape
+    bodies = lambda i: "shared tiny vocab body"  # noqa: E731
     update_index(_df(spark, _corpus(bodies=bodies)), work, idx, term_buckets=TERM_BUCKETS)
     recs = _corpus(bodies=bodies) + [
         {
@@ -173,7 +137,8 @@ def test_update_index_ordering_shift_routes_to_delta(spark, tmp_path):
         }
     ]
     s = update_index(_df(spark, recs), work, idx)
-    assert s["route"] == "delta" and s["route_reason"] == "ordering_shift", s
+    assert s["route"] == "delta", s
+    assert s["route_reason"].startswith("change_ratio") and "<=" in s["route_reason"]
     _assert_view_exact(spark, tmp_path, idx, recs, ["shared", "vocab"], "shift")
 
 
@@ -214,28 +179,6 @@ def test_auto_compaction_budget(spark, tmp_path):
     assert compaction_due(man2, max_segments=4, tombstone_ratio=0.2) is None
 
 
-def test_measure_change_shape_cost_is_change_bound(spark, tmp_path):
-    """The routing signal tokenizes only changed-bucket docs — check it
-    reports a small footprint for a one-page tiny-vocab edit and a big
-    one for scattered unique-vocab edits."""
-    from vexor_spark.index.checkpoint import build_chunks_resumable
-
-    work, idx = tmp_path / "w4", tmp_path / "i4"
-    bodies = lambda i: "shared tiny vocab body common words"  # noqa: E731
-    update_index(_df(spark, _corpus(bodies=bodies)), work, idx, term_buckets=TERM_BUCKETS)
-
-    cur = {3: "shared tiny vocab body common extra"}
-    st = build_chunks_resumable(_df(spark, _corpus(mutations=cur, bodies=bodies)), work)
-    changed = sorted(st["stale_buckets"] + st["removed_buckets"])
-    shape = measure_change_shape(
-        spark, Path(work), Path(idx), changed,
-        n_buckets=32, term_buckets=TERM_BUCKETS,
-    )
-    # one doc: ≤ (6 url tokens + old 6 + new 6) distinct terms
-    assert shape["affected_term_buckets"] <= 18
-    assert shape["bucket_ratio"] <= 0.25
-
-
 def test_noop_reports_live_view_docs(spark, tmp_path):
     """Round-5 ADVICE: the noop route must report the LIVE view's doc
     count (base + segment deltas), not the pre-segment base meta."""
@@ -243,87 +186,90 @@ def test_noop_reports_live_view_docs(spark, tmp_path):
     update_index(_df(spark, _corpus()), work, idx, term_buckets=TERM_BUCKETS)
     cur = _corpus(drop={5})  # removes a page → live count < base count
     s2 = update_index(_df(spark, cur), work, idx, term_buckets=TERM_BUCKETS)
-    assert s2["route"] in ("delta", "inplace", "full_rebuild")
-    if s2["route"] != "delta":  # the routing test pins shapes; here we
-        return  # only care about the segmented-noop report
+    assert s2["route"] == "delta", s2
     s3 = update_index(_df(spark, cur), work, idx, term_buckets=TERM_BUCKETS)
     assert s3["route"] == "noop"
     live = SegmentedIndex(spark, idx).doc_count
+    assert live == N_PAGES - 1
     assert s3["docs"] == live
 
 
-def test_measure_change_shape_sampled_early_exit(spark, tmp_path):
-    """diffuse_ratio enables the sampled early-exit: a diffuse change is
-    detected from a bounded sample (footprint monotone ⇒ a sample past
-    the threshold proves diffuse; `sampled` flags the lower bound), while
-    a concentrated change falls through to the exact pass (no flag,
-    same numbers as the exact call)."""
-    from vexor_spark.index.checkpoint import build_chunks_resumable
-
-    work, idx = tmp_path / "w5", tmp_path / "i5"
-    bodies = lambda i: "shared tiny vocab body common words"  # noqa: E731
-    update_index(_df(spark, _corpus(bodies=bodies)), work, idx, term_buckets=TERM_BUCKETS)
-
-    # diffuse: scattered unique-vocab edits; sample_docs=2 forces a real
-    # subsample at test scale
-    cur = {i: f"edited{i} fresh{i} body{i} new{i} zz{i} qq{i}" for i in range(0, N_PAGES, 2)}
-    st = build_chunks_resumable(_df(spark, _corpus(mutations=cur, bodies=bodies)), work)
-    changed = sorted(st["stale_buckets"] + st["removed_buckets"])
-    shape = measure_change_shape(
-        spark, Path(work), Path(idx), changed,
-        n_buckets=32, term_buckets=TERM_BUCKETS,
-        diffuse_ratio=0.05, sample_docs=2,
-    )
-    assert shape.get("sampled") is True
-    assert shape["bucket_ratio"] > 0.05
-
-    # concentrated: one tiny-vocab edit on a FRESH store (reusing the
-    # diffuse store would also revert every diffuse edit) — sampled
-    # probe stays under the threshold, so the exact pass runs and
-    # matches the unsampled call
-    work2, idx2 = tmp_path / "w6", tmp_path / "i6"
-    update_index(_df(spark, _corpus(bodies=bodies)), work2, idx2, term_buckets=TERM_BUCKETS)
-    cur2 = {3: "shared tiny vocab body common extra"}
-    st2 = build_chunks_resumable(_df(spark, _corpus(mutations=cur2, bodies=bodies)), work2)
-    changed2 = sorted(st2["stale_buckets"] + st2["removed_buckets"])
-    exact = measure_change_shape(
-        spark, Path(work2), Path(idx2), changed2,
-        n_buckets=32, term_buckets=TERM_BUCKETS,
-    )
-    gated = measure_change_shape(
-        spark, Path(work2), Path(idx2), changed2,
-        n_buckets=32, term_buckets=TERM_BUCKETS,
-        diffuse_ratio=0.25, sample_docs=1024,
-    )
-    assert "sampled" not in gated
-    assert gated["affected_term_buckets"] == exact["affected_term_buckets"]
-    assert gated["bucket_ratio"] <= 0.25
-
-
-def test_diffuse_by_count_guard_skips_probe(spark, tmp_path, monkeypatch):
-    """Round-7 retune (2M measurement, BENCH_R07_SCALE
-    inplace_sharedvocab_2M): when the dict-only changed-doc estimate
-    dwarfs the term-bucket count, update_index routes delta WITHOUT
-    paying the shape probe — url tokens alone make such a change
-    diffuse. Forced here by shrinking the guard; the default guard
-    keeps probing small corpora (every other routing test still
-    exercises the probe)."""
-    import vexor_spark.index.maintenance as mt
-
-    work, idx = tmp_path / "w", tmp_path / "i"
+def test_change_ratio_policy_forces_full(spark, tmp_path):
+    work, idx = tmp_path / "w_cr", tmp_path / "i_cr"
     update_index(_df(spark, _corpus()), work, idx, term_buckets=TERM_BUCKETS)
+    mut = {i: f"rewritten{i} totally new body {i}" for i in range(N_PAGES)}
+    s = update_index(_df(spark, _corpus(mutations=mut)), work, idx)
+    assert s["route"] == "full_rebuild", s
+    assert s["route_reason"].startswith("change_ratio")
+    assert s["change_ratio"] > 0.5
 
-    calls = []
-    real = mt.measure_change_shape
-    monkeypatch.setattr(
-        mt, "measure_change_shape",
-        lambda *a, **k: calls.append(1) or real(*a, **k),
+
+def test_removed_docs_leave_the_index(spark, tmp_path):
+    """Dropping the LAST url: its terms disappear from search results
+    and the live doc count falls by one. The url is alone in its input
+    bucket, so the delta holds tombstones and no postings; a later
+    delta stacks on it."""
+    work, idx = tmp_path / "w_rm", tmp_path / "i_rm"
+    update_index(_df(spark, _corpus()), work, idx, term_buckets=TERM_BUCKETS)
+    last = N_PAGES - 1
+    s = update_index(_df(spark, _corpus(drop={last})), work, idx)
+    assert s["route"] == "delta", s
+    assert s["docs_written"] == 0 and s["docs_tombstoned"] == 1, s
+    view = PersistedIndex(spark, idx)
+    assert view.search_distributed(f"alpha{last}", k=5).collect() == []
+    assert view.doc_count == N_PAGES - 1
+    hits = view.search_distributed("common", k=100, prune=False).collect()
+    assert len(hits) == N_PAGES - 1
+
+    cur = _corpus(mutations={3: "alpha3 edited body common"}, drop={last})
+    s2 = update_index(_df(spark, cur), work, idx, tombstone_ratio=1.0)
+    assert s2["route"] == "delta" and s2["segments"] == 2, s2
+    _assert_view_exact(
+        spark, tmp_path, idx, cur, ["common", f"alpha{last}", "alpha3 edited"],
+        "removed",
     )
-    monkeypatch.setattr(mt, "DIFFUSE_DOCS_PER_BUCKET", 0)
-    s = update_index(
-        _df(spark, _corpus(mutations={3: "count guard body"})), work, idx
-    )
-    assert s["route"] == "delta"
-    assert s["route_reason"].startswith("diffuse_by_count")
-    assert "shape" not in s
-    assert not calls  # the probe never ran
+
+
+def test_delta_ub_drift_pruning_is_exact(spark, tmp_path):
+    """A delta that lengthens pages moves the layered view's avgdl past
+    the ub basis the base was encoded with (ub_factor > 1). Pruned
+    search_distributed must still equal prune=False on the same view
+    and a fresh rebuild, scored by url."""
+    n = 200
+
+    def body(i, long=False):
+        head = "common " * (6 if i < 30 else 1) + f"alpha{i} words"
+        return head + "".join(f" pad{i}x{j}" for j in range(120) if long)
+
+    def recs(long=frozenset()):
+        return [_page(i, body(i, i in long)) for i in range(n)]
+
+    work, idx = tmp_path / "w_ub", tmp_path / "i_ub"
+    update_index(_df(spark, recs()), work, idx, term_buckets=8)
+    longer = frozenset(range(5, n, 40))
+    s = update_index(_df(spark, recs(longer)), work, idx, tombstone_ratio=1.0)
+    assert s["route"] == "delta", s
+    view = PersistedIndex(spark, idx)
+    assert view.seg_ids and view.ub_factor > 1.0, view.ub_factor
+
+    rb_dir = tmp_path / "rb_ub"
+    build_and_write_index(_df(spark, recs(longer)), rb_dir, term_buckets=8)
+    rb = PersistedIndex(spark, rb_dir)
+    rb_docs = spark.read.parquet(str(rb_dir / "docs"))
+    view_docs = view.docs_view()
+
+    def by_url(searcher, docs, q, prune, metrics=None):
+        rows = searcher.search_distributed(q, k=10, prune=prune, metrics=metrics)
+        return sorted(
+            (r["rank"], r["url"], round(float(r["score"]), 6))
+            for r in rows.join(docs.select("doc_id", "url"), "doc_id").collect()
+        )
+
+    engaged = 0
+    for q in ("common", "common words", "common alpha45", "pad45x3 common"):
+        m: dict = {}
+        pruned = by_url(view, view_docs, q, True, m)
+        engaged += bool(m.get("pruned"))
+        assert pruned == by_url(view, view_docs, q, False), q
+        assert pruned == by_url(rb, rb_docs, q, False), q
+    assert engaged, "pruning never engaged on the drifted view"

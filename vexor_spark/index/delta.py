@@ -1,13 +1,9 @@
 """Delta segments — LSM-style index maintenance (round-4 addition).
 
-WHY: the 2M-page merge campaign (BENCH_R04_SCALE.json) measured the
-in-place incremental merge at 1.2-1.3× the cost of a full rebuild for
-diffuse 1-10% changes. That is structural, not a bug: every page
-carries unique tail terms (real webtext does too — urls, ids, rare
-words), so any diffuse change marks every term-hash partition
-affected, and an in-place merge must decode + re-encode the head
-terms' postings, which dominate the index's bytes. Production engines
-answer this with SEGMENTS (Lucene, Iceberg deletes): an update writes
+WHY: an in-place posting merge touched every term bucket under any
+diffuse change and cost 1.2-1.3× a full rebuild at 2M pages
+(BENCH_R04_SCALE.json), so it was retired. Production engines answer
+this with SEGMENTS (Lucene, Iceberg deletes): an update writes
 a small delta artifact, queries merge layers at read time, and a
 periodic compaction folds segments into the base. Update cost becomes
 ∝ the change, not the corpus.
@@ -56,7 +52,7 @@ Semantics:
   existing full merge over the (already-current) chunk store and
   clears the segment list.
 
-Reference anchor: replaces the same update flow as index/merge.py
+Reference anchor: the reference's incremental update flow
 (vexor/services/index_service.py:263-344), trading read-time layer
 merging for update cost ∝ change size.
 """
@@ -72,6 +68,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vexor_spark.functions.codec import POSTING_BLOCK_SIZE
 from vexor_spark.index.checkpoint import (
     DEFAULT_INPUT_BUCKETS,
     _append_metrics,
@@ -84,6 +81,7 @@ from vexor_spark.index.storage import (
     PersistedIndex,
     _manifest_path,
     _pending_path,
+    _sorted_block_rows,
 )
 from vexor_spark.operators.chunking import with_document
 from vexor_spark.operators import postings as postings_mod
@@ -236,6 +234,20 @@ def delta_update(
     )
 
 
+def _write_term_tree(frame: DataFrame, path: Path, *, empty: bool) -> None:
+    """Write a segment family partitioned by term_bucket. An empty
+    partitioned write leaves a dir with no files, which neither Spark
+    nor pyarrow can scan (a segment that only removes docs has no
+    postings), so an empty frame is written as one schema-only file
+    under term_bucket=0."""
+    if empty:
+        frame.drop("term_bucket").write.mode("overwrite").parquet(
+            str(path / "term_bucket=0")
+        )
+    else:
+        frame.write.mode("overwrite").partitionBy("term_bucket").parquet(str(path))
+
+
 def _apply_delta(
     spark: SparkSession,
     work_dir: Path,
@@ -333,15 +345,11 @@ def _apply_delta(
     # and segment layers uniformly, and the row-format read overhead
     # that made 2 segments cost 2.5× p50 in round 4 is gone — a
     # segment is just a small extra set of block rows per term bucket.
-    from vexor_spark.functions.codec import POSTING_BLOCK_SIZE
-    from vexor_spark.index.storage import _sorted_block_rows
-
     basis = float(meta.get("ub_avg_doc_len", meta.get("avg_doc_len", 1.0)) or 1.0)
     block_size = int(meta.get("block_size", POSTING_BLOCK_SIZE))
-    (
-        _sorted_block_rows(tf_new, basis, term_buckets, block_size)
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(str(seg_root / "postings" / f"seg={seg_id}"))
+    _write_term_tree(
+        _sorted_block_rows(tf_new, basis, term_buckets, block_size),
+        seg_root / "postings" / f"seg={seg_id}", empty=not stats_new["n"],
     )
     seg_docs.select(*DOC_COLS).write.mode("overwrite").parquet(
         str(seg_root / "docs" / f"seg={seg_id}")
@@ -356,16 +364,16 @@ def _apply_delta(
         .select("doc_id", F.explode(F.array_distinct("tokens")).alias("term"))
         .groupBy("term").agg(F.count("*").alias("df_removed"))
     )
-    (
+    _write_term_tree(
         df_new.join(df_rem, "term", "full")
         .select(
             "term", tb.alias("term_bucket"),
             F.coalesce("df_new", F.lit(0)).cast("long").alias("df_new"),
             F.coalesce("df_removed", F.lit(0)).cast("long").alias("df_removed"),
         )
-        .repartition("term_bucket").sortWithinPartitions("term")
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(str(seg_root / "dfdelta" / f"seg={seg_id}"))
+        .repartition("term_bucket").sortWithinPartitions("term"),
+        seg_root / "dfdelta" / f"seg={seg_id}",
+        empty=not (stats_new["n"] or stats_old["n"]),
     )
 
     rec = {
@@ -478,13 +486,14 @@ def compact_segments(
     work_dir, index_dir = Path(work_dir), Path(index_dir)
     meta = json.loads((index_dir / "meta.json").read_text())
     tb = term_buckets or int(meta["term_buckets"])
+    bs = int(meta.get("block_size", POSTING_BLOCK_SIZE))
     manifest = load_manifest(spark, index_dir)
     n = len(manifest["segments"])
     # full_merge drops the segment trees, manifest and gen markers once
     # the new base is written; a pending marker from a crashed delta is
     # subsumed too — the full merge re-read the current chunk store,
     # change included.
-    summary = full_merge(spark, work_dir, index_dir, term_buckets=tb)
+    summary = full_merge(spark, work_dir, index_dir, term_buckets=tb, block_size=bs)
     summary["action"] = "compact_segments"
     summary["segments_folded"] = n
     return summary

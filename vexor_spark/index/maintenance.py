@@ -1,32 +1,16 @@
-"""Cost-aware unified index maintenance — ONE entry point that routes
-each update to the cheapest mechanism by its MEASURED shape, plus
-budget-triggered auto-compaction (round-5; closes round-4 weak #3).
-
-Why routing must be measured, not assumed: the reference's policy is a
-single change-RATIO gate (`max_incremental_ratio = 0.5`,
-vexor/services/index_service.py:29, update flow :263-344) — incremental
-below it, rebuild above. The 2M-page campaign (BENCH_R04_SCALE.json)
-falsified that premise for this engine's artifact: under DIFFUSE change
-(every page carries unique tail terms — real webtext does too) the
-in-place merge touched all 64 term buckets and cost 1.32× a full
-rebuild at a 1% change, while delta segments cost 0.13×. The ratio says
-"small change"; the SHAPE says whether in-place can win. So:
+"""Unified index maintenance — ONE entry point that routes each update
+by the reference's change-ratio gate (`max_incremental_ratio = 0.5`,
+vexor/services/index_service.py:29, update flow :263-344), plus
+budget-triggered auto-compaction:
 
     no existing index    → full build
     nothing changed      → noop            (budget check still runs)
-    change ratio > 0.5   → full rebuild    (the reference's gate — both
-                                            engines agree here)
-    live segments        → delta           (in-place would rewrite the
-                                            base underneath them)
-    concentrated change  → in-place merge  (affected term buckets ≤
-                                            inplace_max_bucket_ratio,
-                                            measured by tokenizing just
-                                            the changed docs — cost ∝
-                                            change, not corpus)
-    diffuse change       → delta segment
-    ordering shift       → delta           (in-place needs stable doc
-                                            ids; delta allocates fresh
-                                            ids and never reuses them)
+    change ratio > 0.5   → full rebuild
+    otherwise            → delta segment   (live segments or not; delta
+                                            allocates fresh doc ids and
+                                            never reuses them, so an
+                                            ordering shift changes
+                                            nothing)
 
 After every call the compaction budget is checked: more than
 `max_segments` live segments, or tombstones exceeding
@@ -47,14 +31,12 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from vexor_spark.functions.codec import POSTING_BLOCK_SIZE
 from vexor_spark.index.checkpoint import (
     DEFAULT_INPUT_BUCKETS,
     _append_metrics,
-    _bucket_col,
     build_chunks_resumable,
 )
 from vexor_spark.index.delta import (
@@ -63,125 +45,12 @@ from vexor_spark.index.delta import (
     load_manifest,
     resolve_pending_changes,
 )
-from vexor_spark.index.merge import (
-    REBUILD_RATIO,
-    _incremental_merge,
-    full_merge,
-)
+from vexor_spark.index.merge import full_merge
 from vexor_spark.index.storage import _manifest_path, _pending_path, live_doc_count
-from vexor_spark.operators.chunking import with_document
-from vexor_spark.operators.postings import tokenize_docs
 
-# In-place pays a decode+re-encode over every AFFECTED term bucket plus
-# corpus-proportional bookkeeping (id-stability check, doc-table
-# rewrite); delta pays ∝ the change alone but adds a segment layer.
-# Measured at 2M pages: in-place at 64/64 buckets = 1.32× full rebuild,
-# delta = 0.13×. In-place can only win when the change's vocabulary is
-# concentrated in a small fraction of term buckets.
-INPLACE_MAX_BUCKET_RATIO = 0.25
-# Diffuse-by-count guard (round-7, verdict item 5's measured answer):
-# the indexed document is url + label (the reference BM25 contract),
-# and distinct urls contribute ~one distinct token per changed doc, so
-# once the change holds many more docs than there are term buckets its
-# footprint covers ~every bucket — concentration is structurally out
-# of reach, independent of the BODY vocabulary (measured at 2M: a
-# slice whose body vocabulary spans 12/64 buckets still probes 64/64
-# from its url tokens; forced in-place 140.7 s vs delta 47.8 s).
-# When the dict-only doc-count estimate exceeds this many docs PER
-# TERM BUCKET, update_index routes delta without paying even the
-# sampled shape probe (2.3 s of a 29.2 s update at 2M). Wrongly
-# skipping can only pick delta — the always-correct route — and a
-# genuine code-module edit (≤ a few hundred files) stays below the
-# guard and still gets the probe.
-DIFFUSE_DOCS_PER_BUCKET = 32
+REBUILD_RATIO = 0.5  # reference index_service.py:29 max_incremental_ratio
 MAX_SEGMENTS = 4
 TOMBSTONE_RATIO = 0.2
-
-
-def measure_change_shape(
-    spark: SparkSession,
-    work_dir: Path,
-    index_dir: Path,
-    changed: list[int],
-    *,
-    n_buckets: int,
-    term_buckets: int,
-    diffuse_ratio: float | None = None,
-    sample_docs: int = 512,
-) -> dict:
-    """Affected-term-bucket footprint of a change — the routing signal.
-
-    Affected terms = terms of the changed buckets' OLD docs (their
-    postings must shrink) ∪ terms of their NEW chunks (postings must
-    grow); a term bucket is affected iff it holds any such term. Both
-    sides tokenize only changed-bucket docs, so the measurement costs
-    ∝ the change — it never scans the corpus. (Base-only: callers
-    route to delta before measuring when segments are live.)
-
-    Sampled early-exit (`diffuse_ratio`): the bucket footprint is
-    MONOTONE in the doc set, so a bounded sample's footprint is a lower
-    bound on the true one — if `sample_docs` docs per side already
-    touch > diffuse_ratio of the term buckets, the change is provably
-    diffuse and the full tokenize pass is skipped (routing to delta on
-    a sampled "diffuse" verdict can never be a false in-place). Only a
-    concentrated-LOOKING sample pays the exact pass — exactly the case
-    where in-place is on the table and the measurement is worth its
-    price. At 2M×1% the exact pass cost 12.4 s on top of a 30.6 s
-    delta build (BENCH_R06_SCALE inplace_shape_2M); the sampled exit
-    is two ~512-doc jobs."""
-    old_docs = (
-        spark.read.parquet(str(index_dir / "docs"))
-        .withColumn("bucket", _bucket_col(F.col("url"), n_buckets))
-        .filter(F.col("bucket").isin([int(b) for b in changed]))
-    )
-    chunks_dir = work_dir / "chunks"
-    present = [b for b in changed if (chunks_dir / f"bucket={b}").exists()]
-    new_chunks = None
-    if present:
-        new_chunks = (
-            spark.read.option("basePath", str(chunks_dir))
-            .parquet(*[str(chunks_dir / f"bucket={b}") for b in present])
-            .drop("bucket")
-        )
-
-    def _footprint(limit: int | None) -> int:
-        frames = []
-        for src in (old_docs, new_chunks):
-            if src is None:
-                continue
-            d = src.limit(limit) if limit else src
-            frames.append(
-                tokenize_docs(with_document(d), "document")
-                .select(F.explode("tokens").alias("term"))
-            )
-        terms = frames[0]
-        for f_ in frames[1:]:
-            terms = terms.unionByName(f_)
-        return int(
-            terms.select(
-                F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int").alias("b")
-            )
-            .distinct()
-            .count()
-        )
-
-    sampled = False
-    if diffuse_ratio is not None and sample_docs > 0:
-        n_affected = _footprint(sample_docs)
-        if term_buckets and n_affected / term_buckets > diffuse_ratio:
-            sampled = True  # lower bound already past the threshold
-        else:
-            n_affected = _footprint(None)
-    else:
-        n_affected = _footprint(None)
-    out = {
-        "affected_term_buckets": int(n_affected),
-        "term_buckets_total": int(term_buckets),
-        "bucket_ratio": (n_affected / term_buckets) if term_buckets else 1.0,
-    }
-    if sampled:
-        out["sampled"] = True  # footprint is a ≥-diffuse lower bound
-    return out
 
 
 def compaction_due(
@@ -212,16 +81,14 @@ def update_index(
     term_buckets: int = 64,
     block_size: int = POSTING_BLOCK_SIZE,
     rebuild_ratio: float = REBUILD_RATIO,
-    inplace_max_bucket_ratio: float = INPLACE_MAX_BUCKET_RATIO,
     max_segments: int = MAX_SEGMENTS,
     tombstone_ratio: float = TOMBSTONE_RATIO,
     auto_compact: bool = True,
 ) -> dict:
     """The unified maintenance entry point (module docstring has the
-    routing table and the measurements behind it). Returns the route's
-    summary dict with `route`, `route_reason`, `shape` (when measured)
-    and `compaction` attached. Query the result via PersistedIndex —
-    it merges whatever segment layers are live."""
+    routing table). Returns the route's summary dict with `route`,
+    `route_reason` and `compaction` attached. Query the result via
+    PersistedIndex — it merges whatever segment layers are live."""
     work_dir, index_dir = Path(work_dir), Path(index_dir)
     spark = pages.sparkSession
     t0 = time.time()
@@ -230,7 +97,6 @@ def update_index(
         pages, work_dir, n_buckets=n_buckets,
         pending_file=_pending_path(index_dir) if have_index else None,
     )
-    shape: dict | None = None
     if not have_index:
         summary = full_merge(
             spark, work_dir, index_dir,
@@ -263,66 +129,16 @@ def update_index(
             )
             route = "full_rebuild"
             reason = f"change_ratio {ratio:.2f} > {rebuild_ratio}"
-        elif manifest["segments"]:
-            summary = _apply_delta_retrying(
-                spark, work_dir, index_dir, changed,
-                stage1=stage1, manifest=manifest, n_buckets=n_buckets, t0=t0,
-            )
-            route, reason = "delta", "live_segments"
-        elif (
-            meta["doc_count"] * len(changed)
-            > DIFFUSE_DOCS_PER_BUCKET * tb * max(1, stage1["buckets_total"])
-        ):
-            # diffuse by count alone — skip even the sampled probe
-            # (see DIFFUSE_DOCS_PER_BUCKET)
-            est = meta["doc_count"] * len(changed) // max(1, stage1["buckets_total"])
+        else:
             summary = _apply_delta_retrying(
                 spark, work_dir, index_dir, changed,
                 stage1=stage1, manifest=manifest, n_buckets=n_buckets, t0=t0,
             )
             route = "delta"
-            reason = f"diffuse_by_count: ~{est} changed docs vs {tb} term buckets"
-        else:
-            shape = measure_change_shape(
-                spark, work_dir, index_dir, changed,
-                n_buckets=n_buckets, term_buckets=tb,
-                diffuse_ratio=inplace_max_bucket_ratio,
-            )
-            if shape["bucket_ratio"] <= inplace_max_bucket_ratio:
-                summary = _incremental_merge(
-                    spark, work_dir, index_dir, changed,
-                    n_buckets=n_buckets, term_buckets=tb, block_size=bs,
-                )
-                if summary is not None:
-                    route = "inplace"
-                    reason = (
-                        f"concentrated: {shape['affected_term_buckets']}/"
-                        f"{tb} term buckets"
-                    )
-                    _pending_path(index_dir).unlink(missing_ok=True)
-                else:
-                    # surviving doc ids moved — in-place needs the dense
-                    # (url, chunk_index) order intact; delta does not.
-                    summary = _apply_delta_retrying(
-                        spark, work_dir, index_dir, changed,
-                        stage1=stage1, manifest=manifest,
-                        n_buckets=n_buckets, t0=t0,
-                    )
-                    route, reason = "delta", "ordering_shift"
-            else:
-                summary = _apply_delta_retrying(
-                    spark, work_dir, index_dir, changed,
-                    stage1=stage1, manifest=manifest, n_buckets=n_buckets, t0=t0,
-                )
-                route = "delta"
-                reason = (
-                    f"diffuse: {shape['affected_term_buckets']}/{tb} term buckets"
-                )
+            reason = f"change_ratio {ratio:.2f} <= {rebuild_ratio}"
 
     summary["route"] = route
     summary["route_reason"] = reason
-    if shape is not None:
-        summary["shape"] = shape
     summary["change_ratio"] = round(
         len(stage1["stale_buckets"] + stage1["removed_buckets"])
         / stage1["buckets_total"], 4,

@@ -462,8 +462,9 @@ class PersistedIndex:
         self.block_size: int = meta.get("block_size", POSTING_BLOCK_SIZE)
         # Stored block_ub / max_kernel (base AND segments — _apply_delta
         # encodes segments with the base's ub basis) were computed at
-        # encode time with `ub_avg_doc_len` (incremental merges keep the
-        # original basis, merge.py). Kernels grow with avgdl and
+        # encode time with `ub_avg_doc_len`, the base's avgdl when the
+        # last full merge wrote it. Live delta layers move the view's
+        # avgdl away from that basis. Kernels grow with avgdl and
         # k(a2)/k(a1) ≤ a2/a1, so inflating stored bounds by
         # avgdl_now / basis keeps every pruning bound a true upper bound
         # under drift — avgdl_now being the MERGED view's.
