@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from vexor_spark.index.delta import (
@@ -162,30 +163,52 @@ def test_delta_noop_and_fresh_index(spark, tmp_path):
     assert _scores_by_url(seg, docs, "common") == _scores_by_url(pi, docs, "common")
 
 
-def test_driver_paths_refuse_layers_and_decorate_sees_segment_docs(spark, tmp_path):
-    """search_local and warm read base blocks only, so on a view with
-    live segments they raise (naming compact_segments) instead of
-    serving stale base postings; decorate joins the current doc table,
-    so a doc that exists only in a segment gets its metadata."""
-    import pytest
+def test_driver_paths_serve_layers_and_decorate_sees_segment_docs(
+    spark, tmp_path, monkeypatch
+):
+    """search_local and warm serve a view with live segments through
+    the driver executor: search_local (cold, then from warmed
+    contribution vectors) equals the executor route and a rebuild of
+    the current corpus by url; decorate joins the current doc table, so
+    a doc that exists only in a segment gets its metadata."""
+    import vexor_spark.index.storage as storage
 
-    work, idx = tmp_path / "w_drv", tmp_path / "i_drv"
+    work, idx, rebuild = tmp_path / "w_drv", tmp_path / "i_drv", tmp_path / "rb_drv"
     update_index(_df(spark, _corpus()), work, idx, term_buckets=8)
-    extra = [(1, "brandnew page content with common words")]
-    delta_update(_df(spark, _corpus(extra=extra)), work, idx)
+    cur = dict(
+        mutations={3: "freshly minted tokens replacing the old body"},
+        drop={7},
+        extra=[(1, "brandnew page content with common words")],
+    )
+    delta_update(_df(spark, _corpus(**cur)), work, idx)
     view = PersistedIndex(spark, idx)
-    assert view.seg_ids
-    with pytest.raises(ValueError, match="compact_segments"):
-        view.search_local("common")
-    with pytest.raises(ValueError, match="compact_segments"):
-        view.warm()
+    assert view.seg_ids and view._tombstone_arrays() is not None
+    urls = {
+        r["doc_id"]: r["url"]
+        for r in view.docs_view().select("doc_id", "url").collect()
+    }
+    build_and_write_index(_df(spark, _corpus(**cur)), rebuild, term_buckets=8)
+    rb = PersistedIndex(spark, rebuild)
+    rb_urls = {
+        r["doc_id"]: r["url"]
+        for r in spark.read.parquet(str(rebuild / "docs")).select("doc_id", "url").collect()
+    }
+
+    def by_url(hits, names):
+        return {names[d]: round(float(s), 6) for _, d, s in hits}
+
+    cold = {q: view.search_local(q, k=1000) for q in QUERIES}
+    assert view.warm() > 0
+    monkeypatch.setattr(storage, "DRIVER_MAX_POSTINGS", -1)
+    for q in QUERIES:
+        assert view.search_local(q, k=1000) == cold[q], q
+        executor = [tuple(r) for r in view.search_distributed(q, k=1000).collect()]
+        assert by_url(cold[q], urls) == by_url(executor, urls), q
+        assert by_url(cold[q], urls) == by_url(rb.search_local(q, k=1000), rb_urls), q
 
     rows = view.decorate(view.search_distributed("brandnew page", k=3)).collect()
     assert rows and rows[0]["url"] == _page(1001, "")["url"]
     assert rows[0]["preview"] is not None
-
-    compact_segments(spark, work, idx)
-    assert PersistedIndex(spark, idx).search_local("brandnew page", k=1)
 
 
 def test_rebuild_in_place_drops_stale_layers(spark, tmp_path):
@@ -442,6 +465,7 @@ def _ranked(seg, query, k, prune, metrics=None):
     return [(r["rank"], r["doc_id"], round(float(r["score"]), 9)) for r in rows]
 
 
+@pytest.mark.usefixtures("executor_route")
 def test_segmented_pruned_engages_and_is_exact(spark, tmp_path):
     """Round-6 top item: block-max pruning on the SegmentedIndex read
     path. (a) With live segments and ≥k live boosted docs in the base,
@@ -501,6 +525,7 @@ def test_segmented_pruned_engages_and_is_exact(spark, tmp_path):
     assert len(pruned2) == 10
 
 
+@pytest.mark.usefixtures("executor_route")
 def test_segmented_decode_live_equals_join_path(spark, tmp_path):
     """The decode-time tombstone filter (codec.explode_blocks_rows with tomb_bc)
     returns exactly the rows the broadcast max-layer JOIN path returns

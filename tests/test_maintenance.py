@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from vexor_spark.index.delta import SegmentedIndex, load_manifest
 from vexor_spark.index.maintenance import compaction_due, update_index
 from vexor_spark.index.storage import PersistedIndex, build_and_write_index
@@ -230,6 +232,7 @@ def test_removed_docs_leave_the_index(spark, tmp_path):
     )
 
 
+@pytest.mark.usefixtures("executor_route")
 def test_delta_ub_drift_pruning_is_exact(spark, tmp_path):
     """A delta that lengthens pages moves the layered view's avgdl past
     the ub basis the base was encoded with (ub_factor > 1). Pruned

@@ -213,6 +213,7 @@ def test_search_distributed_multi_rank_identity(spark, tmp_path):
     assert pi.search_distributed_multi({"e": "!!!"}, k=5).count() == 0
 
 
+@pytest.mark.usefixtures("executor_route")
 def test_pruning_driver_side_skips(persisted, monkeypatch):
     """Round-5: the driver-side engagement checks make prune=True free
     when it cannot win, and the θ pass costs no Spark job. (a) all
@@ -262,6 +263,7 @@ def test_pruning_driver_side_skips(persisted, monkeypatch):
     ]
 
 
+@pytest.mark.usefixtures("executor_route")
 def test_seed_theta_engages_balanced_common(persisted):
     """Round-6 (verdict item 7): the seed-refined θ — exact driver-side
     totals of a seed pool — separates the balanced-common shape where
@@ -295,6 +297,7 @@ def test_seed_theta_engages_balanced_common(persisted):
     ]
 
 
+@pytest.mark.usefixtures("executor_route")
 def test_seed_precheck_skips_uid_anchored_phrase(persisted):
     """Round-6 follow-up (measured at 2M): a uid-anchored multi-term
     query is PROVABLY unprunable — the rare term's ub rides in every

@@ -249,29 +249,35 @@ PRUNED_QUERY = "dup join"
 
 
 def q_bm25_pruned_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 answered through the round-5 DEFAULT serving path:
-    build the persisted block+varint artifact from the documents table,
-    then `PersistedIndex.search_distributed(prune=True)` — block-max
-    pruning with the driver-side θ walk (index/wand.py). Same scoring
-    semantics as q_bm25_top10, so the DuckDB oracle (_bm25_sql) gates
-    the artifact encode → bucket-pruned scan → decode → prune → rescore
-    pipeline end-to-end. Scores round 6dp BEFORE ranking on both sides
-    (the cross-engine determinism contract). The artifact is cached per
-    sf_dir under /tmp (testdata is immutable)."""
+    """BM25 top-10 answered through the executor route of
+    `PersistedIndex.search_distributed(prune=True)`: build the persisted
+    block+varint artifact from the documents table, then block-max
+    pruning with the driver-side θ walk (index/wand.py). The executor
+    route is called directly — at catalog sizes search_distributed
+    would answer on the driver executor, and this entry gates the Spark
+    pipeline. Same scoring semantics as q_bm25_top10, so the DuckDB
+    oracle (_bm25_sql) gates the artifact encode → bucket-pruned scan →
+    decode → prune → rescore pipeline end-to-end. Scores round 6dp
+    BEFORE ranking on both sides (the cross-engine determinism
+    contract). The artifact is cached under /tmp per sf_dir (testdata
+    is immutable), format version and block size (a codec change
+    writes a new one)."""
     import hashlib
     import json as _json
     import tempfile
     from pathlib import Path
 
     from vexor_spark.functions.codec import POSTING_BLOCK_SIZE
+    from vexor_spark.functions.tokenize import prepare_query_terms
     from vexor_spark.index.storage import (
         FORMAT_VERSION,
         PersistedIndex,
         _sorted_block_rows,
     )
 
+    key = f"{sf_dir}|v{FORMAT_VERSION}|b{POSTING_BLOCK_SIZE}"
     idx_dir = Path(tempfile.gettempdir()) / (
-        "vexor_cat_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+        "vexor_cat_idx_" + hashlib.md5(key.encode()).hexdigest()[:10]
     )
     if not (idx_dir / "meta.json").exists():
         tokenized = _tokenized(spark, sf_dir).localCheckpoint(eager=False)
@@ -308,8 +314,8 @@ def q_bm25_pruned_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ub_avg_doc_len": avgdl,
         }))
     pidx = PersistedIndex(spark, idx_dir)
-    ranked = pidx.search_distributed(
-        PRUNED_QUERY, 10, prune=True, round_dp=SCORE_ROUND_DP
+    ranked = pidx._search_executor(
+        prepare_query_terms(PRUNED_QUERY), 10, prune=True, round_dp=SCORE_ROUND_DP
     )
     return ranked.select(
         F.col("rank").cast("long").alias("rank"),

@@ -92,6 +92,21 @@ def decode_posting_list(data: bytes) -> list[tuple[int, int, int]]:
     return out
 
 
+def live_postings(ids, layer, tombstones):
+    """Keep-mask of the layered-read liveness rule, or None when every
+    posting lives: a posting written at layer L (0 = base) is dead iff
+    its doc's highest tombstoning layer tmax > L. `tombstones` is
+    (sorted doc_ids, tmax) — PersistedIndex._tombstone_arrays. Shared by
+    the executor decode (explode_blocks_rows) and the driver decode."""
+    import numpy as np
+
+    ids_sorted, tmax = tombstones
+    if not len(ids_sorted) or not len(ids):
+        return None
+    pos = np.minimum(np.searchsorted(ids_sorted, ids), len(ids_sorted) - 1)
+    return ~((ids_sorted[pos] == ids) & (tmax[pos] > layer))
+
+
 def explode_blocks_rows(blocks_df, *, tomb_bc=None, keep_layer: bool = False):
     """blocks(term, df, n, blob[, _layer]) → (term, df, doc_id, tf,
     doc_len[, _layer]) posting ROWS in one mapInPandas kernel: the
@@ -131,12 +146,8 @@ def explode_blocks_rows(blocks_df, *, tomb_bc=None, keep_layer: bool = False):
                 else None
             )
             if tomb_bc is not None:
-                ids_sorted, tmax = tomb_bc.value
-                if len(ids_sorted):
-                    pos = np.minimum(
-                        np.searchsorted(ids_sorted, ids), len(ids_sorted) - 1
-                    )
-                    keep = ~((ids_sorted[pos] == ids) & (tmax[pos] > layer))
+                keep = live_postings(ids, layer, tomb_bc.value)
+                if keep is not None:
                     ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
                     term, dfv = term[keep], dfv[keep]
                     if keep_layer:

@@ -31,23 +31,27 @@ bucket; block rows let block-max pruning skip work BEFORE decoding.
 `PersistedIndex` is the one reader: a view over the base plus however
 many segment layers are live (zero after a build or a compaction).
 
-Query paths:
-- `search_local` — zero-Spark-job driver path: Python XXH64 buckets the
-  terms, pyarrow reads only those partitions, decode+score in Python
-  (the serving path; analog of vexor/cache.py:1492-1535 →
-  bm25.score_postings). Base blocks only: refuses a layered view.
-- `search_distributed(prune=False)` — decode matched blocks executor-
-  side, explode, column-arithmetic BM25, one groupBy(doc_id). Over
-  live layers, segment blocks union in, df is the merged df, and
-  tombstoned postings drop at decode time.
-- `search_distributed(prune=True)` — block-max pruning (exact, see
-  wand.py): a θ lower bound from the highest-impact term's own top-k,
-  candidate generation from only the blocks whose upper bound can reach
-  θ, exact rescore restricted to candidates. Candidates come from the
-  driver's block metadata on a zero-layer view, from a Spark pass over
-  every layer's blocks otherwise.
-- `search_distributed_multi` — a whole query batch in one job, over the
-  same layered block frame.
+Query paths — one single-query path with two executors, both exact
+over any number of live layers (segment blocks join in, df is the
+merged df, tombstoned postings die at decode time):
+- driver executor (`search_local`) — zero Spark jobs: Python XXH64
+  buckets the terms, pyarrow reads only those partitions of the base
+  and segment trees, numpy decodes and scores into a dense accumulator
+  (the analog of vexor/cache.py:1492-1535 → bm25.score_postings).
+  prune=True is exact term-at-a-time max-score pruning.
+- executor route — decode matched blocks executor-side, explode,
+  column-arithmetic BM25, one groupBy(doc_id); with prune=True,
+  block-max pruning (exact, see wand.py): a θ lower bound from the
+  highest-impact term's own top-k, candidate generation from only the
+  blocks whose upper bound can reach θ, exact rescore restricted to
+  candidates.
+- `search_distributed` routes per query on driver-held metadata: the
+  driver executor when Σ merged df over the present terms ≤
+  DRIVER_MAX_POSTINGS (its ≤k rows come back as a LocalRelation, so the
+  query starts no Spark job), the executor route otherwise or when the
+  tombstone map exceeds the driver budget.
+- `search_distributed_multi` — a whole query batch in one job, always on
+  the executors, over the same layered block frame.
 
 Writers that replace the base (`write_index`, `build_and_write_index`,
 merge.full_merge) drop any segment layers left over from the old base.
@@ -74,6 +78,27 @@ from vexor_spark.operators.scoring import bm25_contribution_col, top_k
 from vexor_spark.plans.local import local_frame
 
 FORMAT_VERSION = 2  # plays the role of CACHE_VERSION (vexor/cache.py:28)
+
+# search_distributed's routing rule: a query whose Σ merged df over its
+# present terms is at most this many postings runs on the driver
+# executor, larger ones on the Spark executors. Measured on a 4-core
+# Xeon VM, local[4], cold caches (a fresh PersistedIndex per call),
+# head-class and 2-12-term queries, median process-tree CPU of 3 calls
+# (10 ms clock ticks), driver vs executor route:
+#   1000 pages (1,326 docs, 16 term buckets), Σdf 286 → 13,073:
+#     driver 10-30 CPU-ms (8-25 ms wall), executor 820-1,960 CPU-ms
+#     (495-964 ms wall);
+#   20,000 pages (22,504 docs, 64 term buckets), Σdf 75 → 225,749:
+#     driver 10-80 CPU-ms (11-64 ms wall), executor 910-1,940 CPU-ms
+#     (521-1,017 ms wall).
+# The driver won at every measured volume (its cost grows ~0.3 CPU-ms
+# per 1k postings, the executor's is a flat job overhead), so the bound
+# sits at the largest volume measured, 225,749, rounded down.
+DRIVER_MAX_POSTINGS = 225_000
+
+# search_distributed's result schema on both routes (top_k's, nullability
+# included)
+RANKED_SCHEMA = "rank long not null, doc_id long, score double"
 
 DOC_COLS = [
     "doc_id", "url", "chunk_index", "label", "preview",
@@ -398,12 +423,10 @@ class PersistedIndex:
     avg_doc_len come from meta.json and opening runs no Spark job.
     With live layers the statistics come from the manifest's exact
     length sums, and every distributed query path merges layers at
-    read time (exact — equal to a full rebuild of the current corpus,
-    pinned by test_delta.py): segment blocks are unioned into the
-    block frame, per-block df is overridden by the merged df, and
-    tombstoned postings die at decode time. The driver-only paths
-    (search_local, warm) read base blocks alone and refuse a layered
-    view."""
+    read time on both executors (exact — equal to a full rebuild of the
+    current corpus, pinned by test_delta.py): segment blocks join the
+    base blocks, df is the merged df, and tombstoned postings die at
+    decode time."""
 
     # Above this tombstone volume the driver stops materializing the
     # tombstone map locally (θ walks fall back to unpruned, reads use
@@ -459,6 +482,12 @@ class PersistedIndex:
             self.doc_count = meta["doc_count"]
             self.avg_doc_len = meta["avg_doc_len"]
         self.term_buckets: int = meta["term_buckets"]
+        # size of the driver executor's dense accumulators: base ids are
+        # row numbers in [0, doc_count), and delta draws fresh ids from
+        # next_doc_id without ever reusing one
+        self.id_space: int = (
+            int(manifest["next_doc_id"]) if segs else int(meta["doc_count"])
+        )
         self.block_size: int = meta.get("block_size", POSTING_BLOCK_SIZE)
         # Stored block_ub / max_kernel (base AND segments — _apply_delta
         # encodes segments with the base's ub basis) were computed at
@@ -479,8 +508,11 @@ class PersistedIndex:
         # absent terms cache as ([], 0) so misses are also one-shot.
         # Bounded; invalidated by constructing a fresh PersistedIndex
         # (updates rewrite files or add layers — reopen after updates,
-        # like the reference reopens its SQLite cache).
+        # like the reference reopens its SQLite cache). BASE rows only
+        # (the θ machinery reads it); segment rows live in their own
+        # cache of the same shape.
         self._term_cache: "dict[str, tuple[list, int]]" = {}
+        self._seg_term_cache: "dict[str, tuple[list, int]]" = {}
         self.term_cache_max = 4096
         # Metadata-only block rows (no blobs) for the θ machinery —
         # tiny (5 ints per block), bounded like the full cache.
@@ -499,16 +531,11 @@ class PersistedIndex:
 
     # --- plumbing ---------------------------------------------------------
 
-    def _require_base_only(self, what: str) -> None:
-        """The driver-only paths read base blocks alone — on a layered
-        view they would serve a mix of stale base postings and merged
-        statistics, so they refuse instead."""
-        if self.seg_ids:
-            raise ValueError(
-                f"{what} reads base blocks only, but {self.dir} has "
-                f"{len(self.seg_ids)} live segment layer(s); run "
-                "compact_segments() to fold them into the base first"
-            )
+    def _tombstones_on_driver(self) -> bool:
+        """Whether the tombstone map fits the driver budget (always true
+        with no live layer) — the driver executor and the θ machinery
+        need it in memory to drop dead postings."""
+        return not self.seg_ids or self._tomb_total <= self.TOMB_DRIVER_MAX
 
     def _matched_blocks(self, terms: list[str]) -> DataFrame:
         """Block rows for the query terms — bucket partition pruning +
@@ -614,7 +641,7 @@ class PersistedIndex:
         self._tomb_np = None
         if (
             not self.seg_ids or self._tomb_total == 0
-            or self._tomb_total > self.TOMB_DRIVER_MAX
+            or not self._tombstones_on_driver()
             or not self._seg_root("tombstones").exists()
         ):
             return None
@@ -688,12 +715,10 @@ class PersistedIndex:
         ignored, which only weakens θ (sound). Returns ([], None) when
         the tombstone map exceeds the driver budget — wand then falls
         back to unpruned scoring."""
-        exclude = None
-        if self.seg_ids:
-            if self._tomb_total > self.TOMB_DRIVER_MAX:
-                return [], None
-            arrays = self._tombstone_arrays()
-            exclude = arrays[0] if arrays is not None else None
+        if not self._tombstones_on_driver():
+            return [], None
+        arrays = self._tombstone_arrays()
+        exclude = arrays[0] if arrays is not None else None
         if t_star in self._term_cache:
             blocks, _df = self._term_cache[t_star]
             return [b[:5] for b in blocks], exclude
@@ -911,8 +936,11 @@ class PersistedIndex:
         biggest decodes); rare terms stay cheap cold. Stops early when
         the contribution cache budget is half-spent so warmed entries
         don't evict each other. Returns the number of terms warmed.
-        Base-only: raises ValueError on a view with live layers."""
-        self._require_base_only("warm")
+        Terms are chosen by base df; over live layers their vectors
+        cover every layer. Warms nothing when the tombstone map exceeds
+        the driver budget (queries then run on the executors)."""
+        if not self._tombstones_on_driver():
+            return 0
         tbl = self._dataset("dict").to_table(columns=["term", "df"])
         pairs = sorted(
             zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()),
@@ -940,7 +968,8 @@ class PersistedIndex:
         self, query: str, k: int = 10, *, prune: bool = True,
         round_dp: int | None = SCORE_ROUND_DP,
     ) -> list[tuple[int, int, float]]:
-        """[(rank, doc_id, score)] — zero-Spark-job serving path.
+        """[(rank, doc_id, score)] from the driver executor — zero Spark
+        jobs, over the base and every live layer.
 
         Ranks on round_dp-rounded scores by default (the round-7 public
         ranking contract — raw float order is summation-order dependent
@@ -952,83 +981,123 @@ class PersistedIndex:
         list (the reference's own flow, vexor/cache.py:1492-1535 →
         bm25.score_postings) — kept for equivalence testing.
 
-        Base-only: raises ValueError on a view with live layers (use
-        search_distributed, or compact_segments first).
+        When the tombstone map exceeds the driver budget the query runs
+        on the executors instead (same rows, Spark jobs).
         """
-        self._require_base_only("search_local")
         terms = prepare_query_terms(query)
+        if not self._tombstones_on_driver():
+            rows = self._search_executor(terms, k, prune=prune, round_dp=round_dp)
+            return [(r["rank"], r["doc_id"], r["score"]) for r in rows.collect()]
+        return self._search_driver(terms, k, prune=prune, round_dp=round_dp)
+
+    def _search_driver(
+        self, terms: list[str], k: int, *, prune: bool,
+        round_dp: int | None, metrics: dict | None = None,
+    ) -> list[tuple[int, int, float]]:
+        """The driver executor: pyarrow block reads (LRU-cached), numpy
+        decode with the tombstone rule, TAAT scoring, numpy top-k.
+        `metrics` gets blocks_total / blocks_decoded and `pruned` (the
+        TAAT pass froze its candidate set) from the pass itself."""
         if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
             return []
         by_term, dfs = self._term_blocks_cached(terms)
+        total = sum(len(b) for b in by_term.values())
         if prune:
             slack = 1.5 * 10.0 ** (-round_dp) if round_dp is not None else 0.0
-            ids, scores = self._search_local_pruned(
+            ids, scores, decoded, frozen = self._search_local_pruned(
                 terms, by_term, dfs, k, theta_slack=slack
             )
         else:
             ids, scores = self._score_all_np(terms, by_term, dfs)
+            decoded, frozen = total, False
+        if metrics is not None:
+            metrics.update(blocks_total=total, blocks_decoded=decoded, pruned=frozen)
         return _topk_np(ids, scores, k, round_dp=round_dp)
 
-    def _term_blocks_cached(self, terms: list[str]):
-        """{term: sorted block rows}, {term: df} — LRU-cached pyarrow
-        read; only cache-miss terms touch parquet."""
-        missing = [t for t in terms if t not in self._term_cache]
+    def _read_block_rows(self, subdir: str, terms: list[str]) -> dict[str, tuple[list, int]]:
+        """{term: (sorted block rows, stored df)} from ONE pyarrow read of
+        `postings` or `segments/postings`; absent terms map to ([], 0).
+        A row is (block_id, first, last, block_ub, n, blob, layer), with
+        layer 0 for the base and N for segment N."""
+        layered = subdir.startswith("segments/")
+        tbl = self._arrow_read(
+            subdir,
+            terms,
+            ["term", "df", "block_id", "block_first", "block_last",
+             "block_ub", "n", "blob"] + (["seg"] if layered else []),
+        )
+        layers = tbl.column("seg").to_pylist() if layered else [0] * tbl.num_rows
+        out: dict[str, tuple[list, int]] = {t: ([], 0) for t in terms}
+        for t, df_, bid, bf, bl, bub, n_, blob, layer in zip(
+            tbl.column("term").to_pylist(),
+            tbl.column("df").to_pylist(),
+            tbl.column("block_id").to_pylist(),
+            tbl.column("block_first").to_pylist(),
+            tbl.column("block_last").to_pylist(),
+            tbl.column("block_ub").to_pylist(),
+            tbl.column("n").to_pylist(),
+            tbl.column("blob").to_pylist(),
+            layers,
+        ):
+            out[t] = (out[t][0], int(df_))
+            out[t][0].append((bid, bf, bl, bub, int(n_), blob, int(layer)))
+        for blocks, _df in out.values():
+            blocks.sort()
+        return out
+
+    def _cached_rows(self, cache: dict, subdir: str, terms: list[str]) -> dict:
+        """_read_block_rows through an LRU `cache`: only cache-miss terms
+        touch parquet, the query's terms are re-inserted as most recent,
+        and eviction runs after assembly."""
+        missing = [t for t in terms if t not in cache]
         if missing:
-            tbl = self._arrow_read(
-                "postings",
-                missing,
-                ["term", "df", "block_id", "block_first", "block_last",
-                 "block_ub", "n", "blob"],
-            )
-            fresh: dict[str, tuple[list, int]] = {t: ([], 0) for t in missing}
-            for t, df_, bid, bf, bl, bub, n_, blob in zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("df").to_pylist(),
-                tbl.column("block_id").to_pylist(),
-                tbl.column("block_first").to_pylist(),
-                tbl.column("block_last").to_pylist(),
-                tbl.column("block_ub").to_pylist(),
-                tbl.column("n").to_pylist(),
-                tbl.column("blob").to_pylist(),
-            ):
-                fresh[t] = (fresh[t][0], int(df_))
-                fresh[t][0].append((bid, bf, bl, bub, int(n_), blob))
-            for t, (blocks, df_) in fresh.items():
-                blocks.sort()
-                self._term_cache[t] = (blocks, df_)
-        by_term: dict[str, list] = {}
-        dfs: dict[str, int] = {}
-        for t in terms:
-            entry = self._term_cache.pop(t)  # re-insert: LRU recency
-            self._term_cache[t] = entry
-            blocks, df_ = entry
-            if blocks:
-                by_term[t] = blocks
-                dfs[t] = df_
-        # evict AFTER assembly (current query's terms were just
-        # re-inserted, so the oldest entries are from prior queries).
-        while len(self._term_cache) > self.term_cache_max:
-            self._term_cache.pop(next(iter(self._term_cache)))
-        return by_term, dfs
+            cache.update(self._read_block_rows(subdir, missing))
+        out = {t: cache.pop(t) for t in terms}
+        cache.update(out)
+        while len(cache) > self.term_cache_max:
+            cache.pop(next(iter(cache)))
+        return out
+
+    def _term_blocks_cached(self, terms: list[str]):
+        """{term: block rows over every live layer}, {term: df of the
+        view} for the matched terms. With live layers df is the merged
+        df (term_df_map) and a term whose merged df is 0 is absent."""
+        base = self._cached_rows(self._term_cache, "postings", terms)
+        if not self.seg_ids:
+            by_term = {t: b for t, (b, _df) in base.items() if b}
+            return by_term, {t: base[t][1] for t in by_term}
+        segs = self._cached_rows(self._seg_term_cache, "segments/postings", terms)
+        dfs = self.term_df_map(terms)
+        return {t: base[t][0] + segs[t][0] for t in dfs}, dfs
 
     def _term_contribs(self, term: str, blocks: list, dfs: dict[str, int], *, full: bool = True):
         """Decode a term's blocks (ONE batch numpy pass over all blobs)
-        → (doc_ids, contributions). `full=True` (the blocks are the
-        term's ENTIRE list) results memoize — idf/avgdl are fixed per
-        index instance, so contributions are reusable across queries;
-        partial (pruned-subset) decodes bypass the cache."""
+        → live (doc_ids, contributions): over live layers a posting at
+        layer L whose doc was tombstoned above L is dropped
+        (codec.live_postings), so each doc id appears once. `full=True`
+        (the blocks are the term's ENTIRE list) results memoize —
+        idf/avgdl are fixed per index instance, so contributions are
+        reusable across queries; partial (pruned-subset) decodes bypass
+        the cache."""
         import math
 
         import numpy as np
 
         from vexor_spark.constants import BM25_B, BM25_K1
-        from vexor_spark.functions.codec import decode_blocks_np
+        from vexor_spark.functions.codec import decode_blocks_np, live_postings
 
         if full and term in self._contrib_cache:
             return self._contrib_cache[term]
         n, avgdl = self.doc_count, self.avg_doc_len
         idf = math.log((n - dfs[term] + 0.5) / (dfs[term] + 0.5) + 1.0)
-        ids, tfs, dls = decode_blocks_np([b[5] for b in blocks], [b[4] for b in blocks])
+        counts = [b[4] for b in blocks]
+        ids, tfs, dls = decode_blocks_np([b[5] for b in blocks], counts)
+        tombstones = self._tombstone_arrays()
+        if tombstones is not None:
+            layer = np.repeat(np.asarray([b[6] for b in blocks], np.int64), counts)
+            keep = live_postings(ids, layer, tombstones)
+            if keep is not None:
+                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
         tfs = tfs.astype(np.float64)
         denom = tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls.astype(np.float64) / avgdl)
         out = (ids, idf * tfs * (BM25_K1 + 1.0) / denom)
@@ -1049,18 +1118,17 @@ class PersistedIndex:
         """Vectorized decode+score of every matched list (exact
         score_postings semantics, bm25.py:64-89).
 
-        Doc ids are dense row numbers in [0, doc_count), so the
-        accumulator is a flat array indexed by doc id: per-term
-        `acc[ids] += cs` is safe (ids are unique within one posting
-        list) and adds contributions in the same term order as the
-        former concatenate+unique+add.at, so float sums are
-        bit-identical — without any O(n log n) sort. Serving-path
-        only: the distributed query path never builds a dense
-        per-corpus array."""
+        Doc ids lie in [0, id_space), so the accumulator is a flat
+        array indexed by doc id: per-term `acc[ids] += cs` is safe
+        (live ids are unique within one term's list) and adds
+        contributions in the same term order as the former
+        concatenate+unique+add.at, so float sums are bit-identical —
+        without any O(n log n) sort. Driver executor only: the
+        executor route never builds a dense per-corpus array."""
         import numpy as np
 
-        acc = np.zeros(self.doc_count, np.float64)
-        seen = np.zeros(self.doc_count, bool)
+        acc = np.zeros(self.id_space, np.float64)
+        seen = np.zeros(self.id_space, bool)
         hit = False
         for t in terms:
             if t not in by_term:
@@ -1094,11 +1162,13 @@ class PersistedIndex:
         contribution ⇒ returned scores are exact, and excluded docs are
         provably outside the top-k.
 
-        Accumulation is a dense array indexed by doc id (dense row
-        numbers — see _score_all_np): per-term adds happen in the same
-        order as the former concatenate/unique/add.at plan, so sums
-        stay bit-identical, and the freeze check is an O(doc_count)
-        partition instead of repeated O(n log n) uniques.
+        Accumulation is a dense array indexed by doc id (see
+        _score_all_np): per-term adds happen in the same order as the
+        former concatenate/unique/add.at plan, so sums stay
+        bit-identical, and the freeze check is an O(id_space) partition
+        instead of repeated O(n log n) uniques.
+
+        Returns (doc_ids, scores, blocks decoded, whether it froze).
         """
         import math
 
@@ -1110,16 +1180,18 @@ class PersistedIndex:
             for t in terms
             if t in by_term
         }
-        # ub_factor corrects stored block_ub for avgdl drift since encode.
+        # the max block_ub over every layer's rows is term_dict's
+        # max_kernel; ub_factor corrects it for avgdl drift since encode.
         ub = {t: idf[t] * max(b[3] for b in by_term[t]) * self.ub_factor for t in idf}
         order = sorted(idf, key=lambda t: -ub[t])
         remaining = sum(ub.values())
 
-        acc = np.zeros(n, np.float64)
-        seen = np.zeros(n, bool)
+        acc = np.zeros(self.id_space, np.float64)
+        seen = np.zeros(self.id_space, bool)
         frozen: np.ndarray | None = None  # sorted frozen doc ids
         frozen_mask: np.ndarray | None = None
         processed_ub = 0.0
+        decoded = 0
 
         for t in order:
             remaining -= ub[t]
@@ -1134,6 +1206,7 @@ class PersistedIndex:
                 ]
                 if not blocks:
                     continue
+            decoded += len(blocks)
             ids, cs = self._term_contribs(t, blocks, dfs, full=frozen is None)
             if frozen_mask is not None:
                 keep = frozen_mask[ids]
@@ -1159,7 +1232,7 @@ class PersistedIndex:
                         frozen = cand
                         frozen_mask = seen
         uniq = np.flatnonzero(seen)
-        return uniq, acc[uniq]
+        return uniq, acc[uniq], decoded, frozen is not None
 
     def _exploded_rows(self, blocks: DataFrame) -> DataFrame:
         """blocks → live (term, df, doc_id, tf, doc_len) posting rows —
@@ -1212,24 +1285,62 @@ class PersistedIndex:
         self, query: str, k: int = 10, *, prune: bool = True,
         metrics: dict | None = None, round_dp: int | None = SCORE_ROUND_DP,
     ) -> DataFrame:
-        """(rank, doc_id, score) DataFrame — executor-side decode+score;
-        ranks on round_dp-rounded scores by default (round-7 public
-        ranking contract: raw distributed float sums are shuffle-order
-        dependent at the ulp level; rounding + doc_id tiebreak makes
-        the order partitioning-invariant — pass round_dp=None for raw
-        scores/raw order). With prune=True (the default since round
-        5), block-max pruned (exact — see wand.py). Pruning is now
-        free when it cannot win:
-        a driver-side dict check skips the θ pass whenever no query
-        term has df ≥ k (wand.pruned_scores), so tail-term queries pay
-        the unpruned price and head-term queries skip decoding most
-        blocks. `metrics` (with prune) collects the pruning counters —
-        opt-in, costs extra count() actions (wand.pruned_scores
-        docstring). Over live layers, pruning runs over ALL layers with
-        a tombstone-aware θ (round-5 verdict item 1: under the
-        cadence-4 compaction default the production index almost always
-        has live segments, so the steady-state path must prune too)."""
+        """(rank, doc_id, score) DataFrame; ranks on round_dp-rounded
+        scores by default (round-7 public ranking contract: raw float
+        sums are summation-order dependent at the ulp level; rounding +
+        doc_id tiebreak makes the order stable across executors and
+        partitionings — pass round_dp=None for raw scores/raw order).
+
+        Routed per query on driver-held metadata (the REPOSE pattern:
+        decide locally, ship only work big enough to need executors):
+        Σ merged df over the present terms ≤ DRIVER_MAX_POSTINGS → the
+        driver executor (search_local's numpy path; its ≤k rows return
+        as a LocalRelation, so the query starts no Spark job); larger
+        volumes, or a tombstone map over the driver budget → the Spark
+        executors (_search_executor). Both are exact over live layers
+        and return the same rows.
+
+        prune=True prunes on either executor (TAAT max-score on the
+        driver, block-max WAND on the executors — wand.py). `metrics`
+        records `route` and `route_reason`, plus the chosen executor's
+        counters: blocks_total / blocks_decoded / pruned from the TAAT
+        pass, or wand.pruned_scores' counters (which cost extra count()
+        actions)."""
         terms = prepare_query_terms(query)
+        route, reason = self._route(terms)
+        if metrics is not None:
+            metrics.update(route=route, route_reason=reason)
+        if route == "executor":
+            return self._search_executor(
+                terms, k, prune=prune, metrics=metrics, round_dp=round_dp
+            )
+        hits = self._search_driver(
+            terms, k, prune=prune, metrics=metrics, round_dp=round_dp
+        )
+        return local_frame(self.spark, hits, RANKED_SCHEMA)
+
+    def _route(self, terms: list[str]) -> tuple[str, str]:
+        """("driver" | "executor", reason) for one query — from the
+        manifest's tombstone volume and the memoized dict/dfdelta read
+        (term_df_map), no Spark job."""
+        if not self._tombstones_on_driver():
+            return "executor", "tombstones over driver budget"
+        vol = sum(self.term_df_map(terms).values()) if terms else 0
+        if vol <= DRIVER_MAX_POSTINGS:
+            return "driver", f"postings {vol} <= DRIVER_MAX_POSTINGS"
+        return "executor", f"postings {vol} > DRIVER_MAX_POSTINGS"
+
+    def _search_executor(
+        self, terms: list[str], k: int, *, prune: bool,
+        round_dp: int | None, metrics: dict | None = None,
+    ) -> DataFrame:
+        """The executor route: executor-side decode+score, block-max
+        pruned with prune=True (exact — see wand.py). Pruning is free
+        when it cannot win: a driver-side dict check skips the θ pass
+        whenever no query term has df ≥ k (wand.pruned_scores), so
+        tail-term queries pay the unpruned price and head-term queries
+        skip decoding most blocks. Over live layers, pruning runs over
+        ALL layers with a tombstone-aware θ."""
         spark = self.spark
         if not terms or self.doc_count <= 0 or self.avg_doc_len <= 0:
             empty = local_frame(spark, [], "doc_id long, score double")

@@ -1,6 +1,10 @@
 """Block-max pruned BM25 scoring — exact top-k, batch (DataFrame) form
 of block-max WAND (SURVEY §4.2; Ding & Suel's block-max indexes adapted
 to a shuffle engine: documents are pruned, contributions never are).
+It prunes the executor route: `search_distributed` sends a query here
+only when its matched volume is over storage.DRIVER_MAX_POSTINGS (the
+driver executor prunes smaller ones term-at-a-time), and every
+`search_distributed_multi` batch.
 
 Notation: for query term t, ub_t = idf_t · max_kernel_t upper-bounds
 any single contribution of t; for block b of t, bub_{t,b} = idf_t ·
