@@ -157,8 +157,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         # one-off 10× campaign (2M-page build, suite growth factors,
-        # oracle re-check at 10×, rank identity at 2.23M docs):
-        # committed separately, regenerate via scripts/bench_scale10x.py
+        # oracle re-check at 10×, rank identity at 2.23M docs): a
+        # historical artifact; the script that made it is retired
         "scale10x_artifact": "BENCH_SCALE10X.json",
     }
 

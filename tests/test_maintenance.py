@@ -1,19 +1,26 @@
-"""Unified update_index (index/maintenance.py): the four-route table
+"""Unified update_index (index/maintenance.py): the five-route table
 — no index→full build, no change→noop, change ratio > 0.5→full rebuild
-(the reference's gate, vexor/services/index_service.py:29), otherwise
-→delta — each route's result exact vs a from-scratch rebuild, removals
-and avg-doc-len drift through the layered view, and budget-triggered
-auto-compaction folding segments back into the base."""
+(the reference's gate, vexor/services/index_service.py:29), a delta
+that would exceed max_segments→compact, otherwise→delta — each route's
+result exact vs a from-scratch rebuild, removals and avg-doc-len drift
+through the layered view, and budget-triggered auto-compaction folding
+segments back into the base."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 import pytest
 
+from vexor_spark.index import delta
 from vexor_spark.index.delta import SegmentedIndex, load_manifest
 from vexor_spark.index.maintenance import compaction_due, update_index
-from vexor_spark.index.storage import PersistedIndex, build_and_write_index
+from vexor_spark.index.storage import (
+    PersistedIndex,
+    _pending_path,
+    build_and_write_index,
+)
 from vexor_spark.sources.corpus import PAGES_SCHEMA
 
 N_PAGES = 48
@@ -73,8 +80,9 @@ def _assert_view_exact(spark, tmp_path, idx, recs, queries, tag):
 
 def test_update_index_routes_by_shape(spark, tmp_path):
     """full_build → noop → delta (a one-page edit, then a page removal,
-    over the live layer) → full_rebuild, each step rank-identical to a
-    from-scratch rebuild of the current corpus."""
+    over the live layer, past max_segments with auto_compact off) →
+    full_rebuild, each step rank-identical to a from-scratch rebuild of
+    the current corpus."""
     work, idx = tmp_path / "w", tmp_path / "i"
 
     s0 = update_index(_df(spark, _corpus()), work, idx, term_buckets=TERM_BUCKETS)
@@ -98,12 +106,14 @@ def test_update_index_routes_by_shape(spark, tmp_path):
         ["common", "tricky", "alpha3 edited"], "edit",
     )
 
+    # auto_compact=False keeps the delta route past the layer budget
     s2 = update_index(
         _df(spark, _corpus(mutations=cur, drop={7})), work, idx,
-        tombstone_ratio=1.0,
+        max_segments=1, auto_compact=False,
     )
     assert s2["route"] == "delta", s2
     assert s2["route_reason"].startswith("change_ratio") and "<=" in s2["route_reason"]
+    assert s2["compaction"] is None
     assert len(load_manifest(spark, idx)["segments"]) == 2
     _assert_view_exact(
         spark, tmp_path, idx, _corpus(mutations=cur, drop={7}),
@@ -144,7 +154,23 @@ def test_update_index_new_first_url_routes_to_delta(spark, tmp_path):
     _assert_view_exact(spark, tmp_path, idx, recs, ["shared", "vocab"], "shift")
 
 
-def test_auto_compaction_budget(spark, tmp_path):
+def _records(work, stage):
+    path = work / "metrics.jsonl"
+    return [r for r in map(json.loads, path.read_text().splitlines())
+            if r["stage"] == stage]
+
+
+def _assert_bench_keys(summary):
+    """The keys perfbench's update workload reads on every route it
+    takes (delta set-up cycles, compact timed cycles)."""
+    assert {"route", "route_reason", "compaction"} <= summary.keys(), summary
+    if summary["route"] == "delta":
+        assert {"secs", "docs_written", "docs_tombstoned"} <= summary.keys()
+    if summary["compaction"] is not None:
+        assert isinstance(summary["compaction"]["secs"], float)
+
+
+def test_auto_compaction_budget(spark, tmp_path, monkeypatch):
     work, idx = tmp_path / "w3", tmp_path / "i3"
     update_index(_df(spark, _corpus()), work, idx, term_buckets=TERM_BUCKETS)
 
@@ -154,24 +180,61 @@ def test_auto_compaction_budget(spark, tmp_path):
             for i in range(0, N_PAGES, 4)
         }
 
-    # max_segments=1: first delta stays, second trips the budget and
-    # compacts everything back into the base.
+    # max_segments=1: first delta stays; the second would exceed the
+    # budget, so it compacts everything into the base without
+    # writing the delta.
     s1 = update_index(
         _df(spark, _corpus(mutations=diffuse("aa"))), work, idx,
         max_segments=1, tombstone_ratio=1.0,
     )
     assert s1["route"] == "delta" and s1["compaction"] is None
+    _assert_bench_keys(s1)
+    n_deltas = len(_records(work, "delta_update"))
     s2 = update_index(
         _df(spark, _corpus(mutations=diffuse("bb"))), work, idx,
         max_segments=1, tombstone_ratio=1.0,
     )
-    assert s2["route"] == "delta"
-    assert s2["compaction"] is not None
+    assert s2["route"] == "compact", s2
+    assert s2["route_reason"].startswith("change_ratio ")
+    assert s2["route_reason"].endswith(" <= 0.5; segments 2 > 1"), s2
     assert s2["compaction"]["trigger"].startswith("segments")
+    assert s2["compaction"]["segments_folded"] == 1
+    _assert_bench_keys(s2)
+    assert len(_records(work, "delta_update")) == n_deltas
+    last = _records(work, "update_index")[-1]
+    assert (last["route"], last["route_reason"]) == (s2["route"], s2["route_reason"])
     assert not (idx / "segments").exists()
     _assert_view_exact(
         spark, tmp_path, idx, _corpus(mutations=diffuse("bb")),
         ["common", "sprayaa2"], "compacted",
+    )
+
+    # crash in the compaction's merge: the pending marker written by
+    # stage 1 makes the retry (same pages, no stale bucket left) take
+    # the compact route again.
+    update_index(
+        _df(spark, _corpus(mutations=diffuse("cc"))), work, idx,
+        max_segments=1, tombstone_ratio=1.0,
+    )
+    real_merge = delta.full_merge
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(delta, "full_merge", real_merge)
+        raise RuntimeError("crash in full_merge")
+
+    monkeypatch.setattr(delta, "full_merge", crash_once)
+    recs = _corpus(mutations=diffuse("dd"))
+    with pytest.raises(RuntimeError, match="crash in full_merge"):
+        update_index(_df(spark, recs), work, idx, max_segments=1)
+    assert _pending_path(idx).exists()
+    s4 = update_index(_df(spark, recs), work, idx, max_segments=1)
+    assert _records(work, "chunks")[-1]["buckets_built"] == 0
+    assert s4["route"] == "compact", s4
+    assert s4["compaction"]["trigger"] == "segments 2 > 1"
+    assert not _pending_path(idx).exists()
+    assert not (idx / "segments").exists()
+    _assert_view_exact(
+        spark, tmp_path, idx, recs, ["common", "spraydd4", "spraycc4"], "resumed",
     )
 
     # tombstone budget fires independently of layer count

@@ -50,7 +50,10 @@ Semantics:
   score), with ties broken identically by each engine's doc_id order.)
 - `compact_segments` folds everything into the base artifact via the
   existing full merge over the (already-current) chunk store and
-  clears the segment list.
+  clears the segment list. `maintenance.update_index` calls it in place
+  of a delta whose layer would exceed `max_segments` (no segment is
+  written only to be folded), and after a call whose layers or
+  tombstones are over budget.
 
 Reference anchor: the reference's incremental update flow
 (vexor/services/index_service.py:263-344), trading read-time layer

@@ -6,16 +6,27 @@ budget-triggered auto-compaction:
     no existing index    → full build
     nothing changed      → noop            (budget check still runs)
     change ratio > 0.5   → full rebuild
+    otherwise, with auto_compact and one more layer over max_segments
+                         → compact         (full merge over the current
+                                            chunk store, no delta)
     otherwise            → delta segment   (live segments or not; delta
                                             allocates fresh doc ids and
                                             never reuses them, so an
                                             ordering shift changes
                                             nothing)
 
-After every call the compaction budget is checked: more than
+The layer budget is predicted before the delta: the manifest's layer
+count is on the driver, so an update whose delta would tip it runs
+the compaction's full merge straight away instead of writing a
+segment that the compaction deletes seconds later (the merge reads
+the chunk store, which stage 1 has already brought up to date).
+
+After every other call the compaction budget is checked: more than
 `max_segments` live segments, or tombstones exceeding
 `tombstone_ratio` of the view, triggers `compact_segments` — the LSM
-read-cost bound that round 4 left as a manual step.
+read-cost bound that round 4 left as a manual step. The tombstone
+trigger stays post-hoc: predicting it would need the view's doc count
+in the changed buckets, one more job on every delta.
 
 Crash safety: all routes share the durable pending marker
 (storage._pending_path / checkpoint.build_chunks_resumable pending_file)
@@ -53,6 +64,14 @@ MAX_SEGMENTS = 4
 TOMBSTONE_RATIO = 0.2
 
 
+def _layers_over(n_layers: int, max_segments: int) -> str | None:
+    """The layer-count half of the budget, shared by `compaction_due`
+    and `update_index`'s prediction for the layer a delta would add."""
+    if n_layers > max_segments:
+        return f"segments {n_layers} > {max_segments}"
+    return None
+
+
 def compaction_due(
     manifest: dict,
     *,
@@ -63,8 +82,9 @@ def compaction_due(
     layer count bounds per-query read fan-out, tombstone volume bounds
     the anti-join work every layered read pays."""
     segs = manifest["segments"]
-    if len(segs) > max_segments:
-        return f"segments {len(segs)} > {max_segments}"
+    over = _layers_over(len(segs), max_segments)
+    if over is not None:
+        return over
     doc_count = live_doc_count(manifest)
     tombs = sum(s["n_removed"] for s in segs)
     if doc_count > 0 and tombs / doc_count > tombstone_ratio:
@@ -87,11 +107,14 @@ def update_index(
 ) -> dict:
     """The unified maintenance entry point (module docstring has the
     routing table). Returns the route's summary dict with `route`,
-    `route_reason` and `compaction` attached. Query the result via
-    PersistedIndex — it merges whatever segment layers are live."""
+    `route_reason` and `compaction` attached; on the `compact` route
+    `compaction` is the full merge that replaced the delta, with its
+    `trigger`. Query the result via PersistedIndex — it merges whatever
+    segment layers are live."""
     work_dir, index_dir = Path(work_dir), Path(index_dir)
     spark = pages.sparkSession
     t0 = time.time()
+    compaction = None
     have_index = (index_dir / "meta.json").exists()
     stage1 = build_chunks_resumable(
         pages, work_dir, n_buckets=n_buckets,
@@ -129,6 +152,20 @@ def update_index(
             )
             route = "full_rebuild"
             reason = f"change_ratio {ratio:.2f} > {rebuild_ratio}"
+        elif auto_compact and (
+            due := _layers_over(len(manifest["segments"]) + 1, max_segments)
+        ):
+            # the delta would tip the layer budget: compacting now
+            # writes the same base without the segment it would delete
+            compaction = compact_segments(spark, work_dir, index_dir)
+            compaction["trigger"] = due
+            summary = {
+                "action": "compact",
+                "docs": compaction["docs"],
+                "secs": compaction["secs"],
+            }
+            route = "compact"
+            reason = f"change_ratio {ratio:.2f} <= {rebuild_ratio}; {due}"
         else:
             summary = _apply_delta_retrying(
                 spark, work_dir, index_dir, changed,
@@ -144,16 +181,15 @@ def update_index(
         / stage1["buckets_total"], 4,
     ) if stage1["buckets_total"] else 1.0
 
-    summary["compaction"] = None
-    if auto_compact and _manifest_path(index_dir).exists():
+    if compaction is None and auto_compact and _manifest_path(index_dir).exists():
         manifest = load_manifest(spark, index_dir)
         due = compaction_due(
             manifest, max_segments=max_segments, tombstone_ratio=tombstone_ratio
         )
         if due is not None:
-            comp = compact_segments(spark, work_dir, index_dir)
-            comp["trigger"] = due
-            summary["compaction"] = comp
+            compaction = compact_segments(spark, work_dir, index_dir)
+            compaction["trigger"] = due
+    summary["compaction"] = compaction
 
     summary["total_secs"] = round(time.time() - t0, 3)
     _append_metrics(work_dir, {

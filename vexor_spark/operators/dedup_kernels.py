@@ -50,7 +50,9 @@ _31 = np.uint64(31)
 # count — Zipf token streams qualify by orders of magnitude; a
 # high-entropy batch (n_unique ~ |occurrences|) falls back to the
 # occurrence-lane reduceat path. Tests monkeypatch this to force and
-# cross-check both paths on identical data.
+# cross-check both paths on identical data. Peak memory of the dense
+# path: the one float64 count matrix, n_docs · n_unique · 8 B ≤
+# 8 · 8 = 64 B per token occurrence (64 MB for a 1M-token batch).
 _DENSE_MAX_RATIO = 8
 
 
@@ -205,12 +207,14 @@ def make_simhash_features_udf(
             # uniques. Gated on matrix work ≤ 8× the occurrence count,
             # so high-entropy batches (nuniq ~ |tokens|) keep the
             # occurrence-lane path below.
+            # weighted bincount returns the float64 counts in one
+            # allocation (exact: integers < 2^53)
             doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-            cmat = (
-                np.bincount(doc_idx * nuniq + codes, minlength=n * nuniq)
-                .astype(np.float64)
-                .reshape(n, nuniq)
-            )
+            cmat = np.bincount(
+                doc_idx * nuniq + codes,
+                weights=np.ones(len(codes)),
+                minlength=n * nuniq,
+            ).reshape(n, nuniq)
             if spread_params is None:
                 spreads_u = [uhu]
             else:
